@@ -55,12 +55,12 @@ def build_arg_parser() -> argparse.ArgumentParser:
     p.add_argument("--master", default=None, help="Spark master override")
     p.add_argument(
         "--engine",
-        choices=("arrow", "fused", "catalyst"),
-        default="arrow",
-        help="batch engine: arrow = Arrow parse + partitioned fold "
-        "(default); fused = one raw-line shuffle, parse+fold in a single "
-        "Python stage (lowest shuffle volume — prefer on real clusters); "
-        "catalyst = pure-expression parse+fold (no Python on the hot path)",
+        choices=("catalyst",),
+        default=None,
+        help="batch engine.  Default: parse_lines_arrow + sessionize, fused "
+        "into one Python stage that parses and folds the raw lines after "
+        "one shuffle.  catalyst = pure-expression parse+fold (no Python on "
+        "the hot path; several times slower)",
     )
     return p
 
@@ -119,10 +119,7 @@ def main(argv: list[str] | None = None) -> int:
         parse_lines,
         parse_lines_arrow,
     )
-    from postfix_log_parser_spark.operators.sessionize import (
-        sessionize,
-        sessionize_raw,
-    )
+    from postfix_log_parser_spark.operators.sessionize import sessionize
     from postfix_log_parser_spark.sinks import write_events
     from postfix_log_parser_spark.sources.text import lines_df, read_text
 
@@ -131,9 +128,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         lines = read_text(spark, args.inputs)
 
-    if args.engine == "fused":
-        events, faults, state = sessionize_raw(lines)
-    elif args.engine == "catalyst":
+    if args.engine == "catalyst":
         events, faults, state = sessionize(parse_lines(lines), fold="catalyst")
     else:
         events, faults, state = sessionize(parse_lines_arrow(lines), raw_lines=lines)

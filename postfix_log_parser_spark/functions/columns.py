@@ -12,6 +12,24 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal, for expression text: quote and
+    backslash escaped, every char outside printable ASCII as ``\\uXXXX``
+    (astral chars as their UTF-16 surrogate pair)."""
+    units = s.encode("utf-16-be", "surrogatepass")
+    out = []
+    for i in range(0, len(units), 2):
+        u = int.from_bytes(units[i : i + 2], "big")
+        c = chr(u)
+        if c in "'\\":
+            out.append("\\" + c)
+        elif 0x20 <= u < 0x7F:
+            out.append(c)
+        else:
+            out.append(f"\\u{u:04x}")
+    return "'" + "".join(out) + "'"
+
+
 def char_lstrip(col: Column, ch: str) -> Column:
     """Python ``str.lstrip(ch)`` — strip a *run* of ``ch`` from the left."""
     return F.regexp_replace(col, f"^[{ch}]+", "")

@@ -558,10 +558,10 @@ def q166_pystream_relay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q45_fused_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same fixtures and projection as q40, through the FUSED engine
-    (``sessionize_raw``: one raw-line shuffle, parse+fold+J1 in a single
-    Python stage) — the driver-verified correctness gate for the
-    cluster-scale throughput path, against the identical VALUES oracle."""
+    """Same fixtures and projection as q40, through the FUSED plan
+    (``sessionize_raw``: one raw-line shuffle, parse+fold in a single
+    Python stage, J1 after the fold) — the driver-verified correctness
+    gate for the throughput path, against the identical VALUES oracle."""
     from postfix_log_parser_spark.operators.sessionize import sessionize_raw
 
     raw = lines_df(spark, ALL_EVENTS_FIXTURE.splitlines())

@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from postfix_log_parser_spark.functions.columns import sql_str
+
 
 def with_seq(df: DataFrame, line_col: str = "value") -> DataFrame:
     """Attach a globally ordered sequence number to each input line.
@@ -57,13 +59,27 @@ _QUEUE_ID_RE = "^[0-9A-F]{11}:$"
 # Python str.isspace() whitespace beyond Java regex \\s (= [ \\t\\n\\x0B\\f\\r]):
 # \\x1c-\\x1f separators, NEL, NBSP, ogham space mark, en-quad..hair-space,
 # line/paragraph separators, narrow NBSP, medium math space, ideographic
-# space.  Explicit escapes so the class is auditable (no invisible chars).
-_WS = (
-    "[\\s"
-    "\x1c-\x1f\x85\xa0\u1680"
-    "\u2000-\u200a\u2028\u2029\u202f\u205f\u3000"
-    "]"
+# space.  Explicit escapes so the set is auditable (no invisible chars).
+_PY_ONLY_WS = (
+    "\x1c\x1d\x1e\x1f\x85\xa0\u1680"
+    "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
+    "\u2028\u2029\u202f\u205f\u3000"
 )
+_WS = f"[\\s{_PY_ONLY_WS}]"
+
+
+def queue_key(value: Column) -> Column:
+    """Token 3 of the Python-whitespace tokenization when it has the Q10
+    queue-id shape, minus its ':'; '' otherwise.  Equals ``_parse_row``'s
+    ``queue_id`` on every line that has one, so every admitted line of a
+    queue co-locates with its queue.  Every Python-only whitespace char is
+    first folded to ' ', so one anchored ASCII regex tokenizes like
+    ``str.split()`` — no per-line scan of the big Unicode class."""
+    ascii_ws = F.translate(value, _PY_ONLY_WS, " " * len(_PY_ONLY_WS))
+    return F.regexp_extract(
+        ascii_ws, r"^\s*\S+\s+\S+\s+\S+\s+([0-9A-F]{11}):(?:\s|$)", 1
+    )
+
 
 def _empty_str_map() -> Column:
     return F.expr("map()").cast("map<string,string>")
@@ -371,27 +387,23 @@ def parse_lines_arrow(lines: DataFrame, line_col: str = "value") -> DataFrame:
     expressions) but the parse is opaque to Catalyst — no column pruning
     into it, so narrow consumers (like the dovecot dim) should use
     ``dovecot_dim_from_raw`` on the raw text instead of filtering this
-    output.  Use it for parse→sessionize throughput paths (CLI, bench);
-    use the Catalyst engine when downstream queries want pruning/pushdown.
+    output.
+
+    The result is tagged as the parse of ``lines``: handed, unmodified, to
+    ``sessionize(parsed, raw_lines=lines)``, it is never executed on its
+    own — sessionize fuses parse and fold into one Python stage.
     """
     df = with_seq(lines, line_col)
     if line_col != "value":
         df = df.withColumnRenamed(line_col, "value")
-    return df.select("seq", "value").mapInPandas(
-        _parse_batches, _PARSED_OUT_SCHEMA
-    )
-
-
-_DOVECOT_DIM_SCHEMA = T.StructType(
-    [
-        T.StructField("seq", T.LongType(), True),
-        T.StructField("dovecot_msgid", T.StringType(), True),
-        T.StructField("dovecot_action", T.StringType(), True),
-    ]
-)
+    out = df.select("seq", "value").mapInPandas(_parse_batches, _PARSED_OUT_SCHEMA)
+    out._arrow_parse_of = (lines, line_col)
+    return out
 
 
 def _dovecot_batches(batches):
+    """Python oracle of ``dovecot_dim_from_raw`` (the differential tests
+    run it through ``mapInPandas``)."""
     for pdf in batches:
         mask = pdf["value"].str.contains(" Info: sieve: msgid=", regex=False)
         rows = []
@@ -415,21 +427,30 @@ def _dovecot_batches(batches):
 
 
 def dovecot_dim_from_raw(lines: DataFrame, line_col: str = "value") -> DataFrame:
-    """Extract the (tiny) dovecot correlation dim straight from raw text:
-    a vectorized substring pre-filter touches every line, the exact shape
-    check (Q8) runs only on the rare candidates.  Semantically identical
-    to ``parsed.filter(dovecot_msgid.isNotNull())`` but costs a cheap
-    string scan instead of a second full parse — the right dim-build for
-    the Arrow parse engine, whose output Catalyst cannot prune into."""
-    df = with_seq(lines, line_col)
-    if line_col != "value":
-        df = df.withColumnRenamed(line_col, "value")
-    # JVM-side twin of _dovecot_batches' substring pre-filter: drops the
-    # ~99.9% non-sieve lines BEFORE the Arrow transfer, so the Python
-    # stage sees only candidates instead of the whole log
-    cand = df.filter(F.col("value").contains(" Info: sieve: msgid="))
-    return cand.select("seq", "value").mapInPandas(
-        _dovecot_batches, _DOVECOT_DIM_SCHEMA
+    """Extract the (tiny) dovecot correlation dim straight from raw text,
+    as narrow Catalyst expressions: a substring pre-filter touches every
+    line, the Q8 shape check and tokenization run only on the rare
+    candidates.  Token for token the twin of ``_dovecot_batches``, and
+    equal to ``parsed.filter(dovecot_msgid.isNotNull())`` without a second
+    full parse or any Python stage."""
+    ws, spaces = sql_str(_PY_ONLY_WS), sql_str(" " * len(_PY_ONLY_WS))
+    edges, runs = sql_str(r"^\s+|\s+$"), sql_str(r"\s+")
+    trimmed = f"regexp_replace(translate(`{line_col}`, {ws}, {spaces}), {edges}, '')"
+    msgid = "substring(get(_t, 6), instr(get(_t, 6), '=') + 1)"
+    return (
+        with_seq(lines, line_col)
+        .filter(F.col(line_col).contains(" Info: sieve: msgid="))
+        .selectExpr("seq", f"split({trimmed}, {runs}) AS _t")
+        .filter(
+            "size(_t) >= 9 AND get(_t, 4) = 'Info:' AND get(_t, 5) = 'sieve:'"
+            " AND startswith(get(_t, 6), 'msgid=') AND get(_t, 7) = 'fileinto'"
+            " AND get(_t, 8) = 'action:'"
+        )
+        .selectExpr(
+            "seq",
+            f"substring({msgid}, 1, length({msgid}) - 1) AS dovecot_msgid",
+            "concat_ws(' ', slice(_t, 10, size(_t) - 9)) AS dovecot_action",
+        )
     )
 
 

@@ -7,30 +7,48 @@ is order-sensitive (quirks Q1-Q4), and a failed finalization (missing
 required field → KeyError) leaves the session open (``parse.py:352-353``:
 the ``del`` only runs after a successful event construction).
 
-Spark design — three interchangeable fold strategies, one semantics:
+Spark design — each call only builds a plan; nothing runs until the
+caller's action:
 
-* ``partitioned`` (default): ``repartition(queue_id)`` +
-  ``sortWithinPartitions(queue_id, seq)`` + a linear ``mapInPandas`` scan
-  running the ``_QueueFolder`` state machine over contiguous queue runs.
-  One hash shuffle (the irreducible co-location cost of any keyed fold),
-  then ~1µs/row Python — measured ~6× faster than the Catalyst expression
-  fold at 100k lines and ~6-30× at 1M.  An order-sensitive multi-key
-  state machine is precisely the case where built-in operators can't
-  express the semantics efficiently (interpreted higher-order lambdas),
-  so this is the sanctioned mapInPandas escape hatch.
-* ``catalyst``: the pure-expression fold (``_fold_native``) — zero Python
-  on the fold path; kept as a working alternative and differential check.
-* ``pandas``: per-group ``applyInPandas`` oracle — the most direct
-  transcription of the reference's ``feed_line`` loop; used by the quirk
-  tests as the ground truth all strategies must match.
-* Everything *after* the fold — event projection (P4 P5 P6 P11 P12), the
-  dovecot correlation join (J1), fault splitting — is native Catalyst.
-* The dovecot join replaces the reference's O(open-sessions) linear scan
-  per dovecot line (``parse.py:373-375``) with a broadcast hash join on
-  msgid validity intervals: exact order semantics (a dovecot line updates a
-  session iff the session's *current* ``message-id`` value at that point in
-  the log equals the msgid and the session has not been removed yet), at
-  hash-join cost.
+* Fused (the default batch path): ``sessionize(parse_lines_arrow(raw),
+  raw_lines=raw)`` never executes the parse on its own.  It shuffles the
+  RAW line keyed by a Catalyst queue-id key (``parse.queue_key``), and one
+  Python stage parses and folds in place (``_fused_batches``): parse
+  output never crosses a serialization boundary, and a batch ingest is
+  one Spark action with one Python stage.
+* Any other ``parsed`` goes through one of three interchangeable fold
+  strategies, one semantics:
+
+  * ``partitioned`` (default): ``repartition(queue_id)`` +
+    ``sortWithinPartitions(queue_id, seq)`` + a linear ``mapInPandas``
+    scan running the ``_QueueFolder`` state machine over contiguous queue
+    runs.  One hash shuffle (the irreducible co-location cost of any
+    keyed fold), then ~1µs/row Python.  An order-sensitive multi-key
+    state machine is precisely the case where built-in operators can't
+    express the semantics efficiently (interpreted higher-order lambdas),
+    so this is the sanctioned mapInPandas escape hatch.
+  * ``catalyst``: the pure-expression fold (``_fold_native``) — zero
+    Python on the fold path; kept as a working alternative and
+    differential check.
+  * ``pandas``: per-group ``applyInPandas`` oracle — the most direct
+    transcription of the reference's ``feed_line`` loop; the ground truth
+    the quirk tests hold every strategy to.
+
+* J1, the dovecot sieve correlation, runs once, after the fold, for every
+  strategy.  A dovecot line updates a session iff the session's *current*
+  ``message-id`` at that point in the log equals the msgid and the
+  session has not been removed yet, so each session carries its msgid
+  validity intervals and J1 keeps the last sieve line inside one of them
+  (``_resolve_dovecot``).  When the input's planned size proves the sieve
+  dim holds at most ``max_broadcast_dovecot`` lines, the dim becomes one
+  value, a hash table on msgid (``_sieve_buckets``), that a scalar
+  subquery hands to every row: one O(1) bucket lookup per interval, and
+  the table is never copied into rows.  Otherwise the intervals are
+  exploded and joined to the dim (AQE picks the join strategy at run
+  time), then reduced per session.  Both replace the reference's
+  O(open-sessions) scan per dovecot line (``parse.py:373-375``).
+* Everything after the fold — event projection (P4 P5 P6 P11 P12), J1,
+  fault splitting — is native Catalyst.
 
 Known divergences (documented, pathological inputs only): ``k=v`` tokens
 named ``raw_log`` or ``timestamp`` would corrupt the reference's state
@@ -39,7 +57,6 @@ dict in ways we do not replicate (SURVEY.md §2.10 discussion).
 
 from __future__ import annotations
 
-from bisect import bisect_left
 from typing import Any
 
 import pandas as pd
@@ -84,10 +101,6 @@ FOLD_SCHEMA = T.StructType(
         T.StructField("fault_reason", T.StringType(), True),
         T.StructField("fault_line", T.StringType(), True),
         T.StructField("fault_seq", T.LongType(), True),
-        # J1 final action, resolved in-fold when the partitioned fold
-        # carries the broadcast dovecot map; null for the catalyst/pandas
-        # folds, whose resolution stays in the Catalyst stage
-        T.StructField("dovecot_final", T.StringType(), True),
     ]
 )
 
@@ -114,13 +127,11 @@ class _QueueFolder:
         "msgid_sets",
         "kv_dovecot_seq",
         "out",
-        "dov",
     )
 
-    def __init__(self, queue_id: str, out: list, dov: dict | None = None):
+    def __init__(self, queue_id: str, out: list):
         self.queue_id = queue_id
         self.out = out
-        self.dov = dov
         self.fields: dict[str, str] = {}
         self.to_list: list[str] = []
         self.raw_log: list[str] = []
@@ -140,32 +151,6 @@ class _QueueFolder:
             for i, (s, v) in enumerate(ms)
         ]
 
-    def _resolve_final(self, removed_seq):
-        """In-fold J1 resolution (broadcast-map fast path): the max-dseq
-        sieve line whose dseq falls inside any msgid validity interval —
-        the same predicate as the Catalyst array expression, but O(log n)
-        per interval via bisect on the per-msgid sorted dseq list, instead
-        of an O(sessions x sieve-lines) interpreted array scan."""
-        best_seq = None
-        best_action = None
-        dov = self.dov
-        ms = self.msgid_sets
-        for i, (lo, msgid) in enumerate(ms):
-            ent = dov.get(msgid)
-            if ent is None:
-                continue
-            seqs, actions = ent
-            hi = ms[i + 1][0] if i + 1 < len(ms) else removed_seq
-            idx = (len(seqs) if hi is None else bisect_left(seqs, hi)) - 1
-            if idx >= 0 and seqs[idx] > lo and (best_seq is None or seqs[idx] > best_seq):
-                best_seq = seqs[idx]
-                best_action = actions[idx]
-        kv = self.kv_dovecot_seq
-        # the later setter wins: k=v token vs the dovecot handler
-        if best_seq is not None and (kv is None or best_seq > kv):
-            return best_action
-        return self.fields.get("dovecot_fileinto_action")
-
     def _session_row(self, record_type, removed_seq):
         return (
             record_type,
@@ -181,7 +166,6 @@ class _QueueFolder:
             None,
             None,
             None,
-            self._resolve_final(removed_seq) if self.dov is not None else None,
         )
 
     def _fault_row(self, reason, line, seq):
@@ -199,7 +183,6 @@ class _QueueFolder:
             reason,
             line,
             seq,
-            None,
         )
 
     def feed(self, seq, line, kind, timestamp, fields, to_list, status_description,
@@ -257,40 +240,56 @@ class _QueueFolder:
             self.out.append(self._session_row("state", None))
 
 
-def _feed_frame(folder_of, pdf: pd.DataFrame) -> None:
-    """Push one (queue-sorted) pandas frame through per-queue folders."""
-    ts_col = pdf["timestamp"]
-    for i, row in enumerate(pdf.itertuples(index=False)):
-        ts = ts_col.iloc[i]
-        folder_of(row.queue_id).feed(
-            int(row.seq),
-            row.line,
-            row.kind,
-            None if pd.isna(ts) else ts.to_pydatetime(),
-            row.fields,
-            row.to_list,
-            None if row.status_description is None else row.status_description,
-            row.subject,
-            row.fault_reason,
-        )
+def _feed_frame(folder_of, out: list, pdf: pd.DataFrame) -> None:
+    """Push one (queue-sorted) pandas frame of parsed lines through
+    per-queue folders.  Columns are unboxed once per frame: a per-row
+    ``iloc`` plus Timestamp boxing would cost more than the fold itself."""
+    ts = pdf["timestamp"]
+    stamps = ts.astype(object).where(ts.notna(), None)
+    for q, seq, line, kind, t, fields, to_list, desc, subject, fault in zip(
+        pdf["queue_id"],
+        pdf["seq"].tolist(),
+        pdf["line"],
+        pdf["kind"],
+        stamps,
+        pdf["fields"],
+        pdf["to_list"],
+        pdf["status_description"],
+        pdf["subject"],
+        pdf["fault_reason"],
+    ):
+        folder_of(q).feed(seq, line, kind, t, fields, to_list, desc, subject, fault)
 
 
-def _fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas oracle: replay ONE queue_id's lines in seq order."""
-    pdf = pdf.sort_values("seq")
-    out: list = []
-    folder = _QueueFolder(pdf["queue_id"].iloc[0], out)
-    _feed_frame(lambda q: folder, pdf)
-    folder.close()
-    return pd.DataFrame(out, columns=_FOLD_COLUMNS)
+def _feed_raw_frame(folder_of, out: list, pdf: pd.DataFrame) -> None:
+    """Fused twin of ``_feed_frame``: each (key, seq)-sorted raw line is
+    parsed (``_parse_row``, the Arrow engine's per-line twin) and
+    immediately fed to its queue's folder.  Non-admitted lines either emit
+    a pre-fold fault row (dovecot-shape IndexError, Q8/Q12) or are dropped
+    in place."""
+    from postfix_log_parser_spark.operators.parse import _parse_row
+
+    for seq, value in zip(pdf["seq"].tolist(), pdf["value"]):
+        r = _parse_row(seq, value)
+        # r = (seq, line, kind, ts, queue_id, fields, to_list,
+        #      status_desc, subject, dmsgid, daction, fault, admitted)
+        if r[12]:
+            folder_of(r[4]).feed(r[0], r[1], r[2], r[3], r[5], r[6], r[7], r[8], r[11])
+        elif r[2] == "fault":
+            # pre-fold fault (never entered state): same row shape the
+            # folders emit, so one union-free output stream
+            out.append(
+                ("fault", r[4], None, None, None, None, None, None,
+                 None, None, r[11], r[1], r[0])
+            )
 
 
-def _prefold_partitions(batches, dov: dict | None = None) -> "Any":
-    """mapInPandas fold over a queue-partitioned, (queue_id, seq)-sorted
-    stream: rows for one queue are contiguous and ordered, so a linear
-    scan with one live folder per queue-run replays every session at
-    Python-dict speed (the reference's own per-line cost), with none of
-    the per-tiny-group scheduling overhead of applyInPandas."""
+def _fold_frames(frames, feed) -> "Any":
+    """Linear fold over one partition's (queue, seq)-sorted frames: rows
+    for one queue are contiguous and ordered, so one live folder per
+    queue-run replays every session at Python-dict speed (the reference's
+    own per-line cost), with none of the per-tiny-group scheduling
+    overhead of applyInPandas.  Emits FOLD rows in bounded frames."""
     out: list = []
     live: dict[str, _QueueFolder] = {}
     current: list = [None]  # [folder] — queue runs are contiguous
@@ -301,114 +300,78 @@ def _prefold_partitions(batches, dov: dict | None = None) -> "Any":
             return f
         f = live.get(q)
         if f is None:
-            f = _QueueFolder(q, out, dov)
-            live[q] = f
+            f = live[q] = _QueueFolder(q, out)
         current[0] = f
         return f
 
-    for pdf in batches:
-        _feed_frame(folder_of, pdf)
+    for pdf in frames:
+        feed(folder_of, out, pdf)
         if len(out) >= 10_000:
             yield pd.DataFrame(out, columns=_FOLD_COLUMNS)
             out.clear()
-            for f in live.values():
-                f.out = out
     for f in live.values():
         f.close()
     if out:
         yield pd.DataFrame(out, columns=_FOLD_COLUMNS)
 
 
-def _fold_partitioned(feed: DataFrame, dov_bc=None) -> DataFrame:
-    """Default batch fold: ONE hash shuffle (repartition on queue_id) +
-    in-partition sort + linear Arrow-batched scan.
+def _fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """applyInPandas oracle: replay ONE queue_id's lines in seq order."""
+    frames = list(_fold_frames([pdf.sort_values("seq")], _feed_frame))
+    return pd.concat(frames) if frames else pd.DataFrame([], columns=_FOLD_COLUMNS)
+
+
+def _prefold_partitions(batches) -> "Any":
+    return _fold_frames(batches, _feed_frame)
+
+
+def _fused_batches(batches) -> "Any":
+    return _fold_frames(batches, _feed_raw_frame)
+
+
+def _fold_partitioned(feed: DataFrame) -> DataFrame:
+    """Two-stage fold over parsed lines: ONE hash shuffle (repartition on
+    queue_id) + in-partition sort + linear Arrow-batched scan.
 
     Scale shape: identical shuffle volume to any keyed fold (the data must
-    co-locate per key once); the per-row work is a Python dict state
-    machine at ~1µs/row — measured ~30× faster than the interpreted
-    Catalyst array-expression fold at 1M lines, and the same design holds
-    on a 1000-executor cluster (partitions stay bounded by
+    co-locate per key once); partitions stay bounded by
     spark.sql.shuffle.partitions; per-queue data is a 5-20 line session,
-    uniform hex key → no skew).
-
-    ``dov_bc`` (a SparkContext broadcast of {msgid: (sorted dseqs,
-    actions)}) enables in-fold J1 resolution: each emitted session looks
-    its msgid intervals up in the executor-local hash map, so the J1 cost
-    is O(sessions x intervals x log sieve-lines) — replacing the
-    Catalyst broadcast-array scan, which is O(sessions x sieve-lines)
-    interpreted and dominates end-to-end time once sieve lines number in
-    the thousands."""
-    arranged = feed.repartition(F.col("queue_id")).sortWithinPartitions(
-        "queue_id", "seq"
-    )
-    if dov_bc is None:
-        return arranged.mapInPandas(_prefold_partitions, FOLD_SCHEMA)
-    return arranged.mapInPandas(
-        lambda batches: _prefold_partitions(batches, dov_bc.value), FOLD_SCHEMA
+    uniform hex key → no skew."""
+    return (
+        feed.repartition(F.col("queue_id"))
+        .sortWithinPartitions("queue_id", "seq")
+        .mapInPandas(_prefold_partitions, FOLD_SCHEMA)
     )
 
 
-def _fused_batches(batches, dov: dict) -> "Any":
-    """Fused parse+fold worker: each (key, seq)-sorted raw line is parsed
-    (``_parse_row``, the Arrow engine's per-line twin) and immediately fed
-    to its queue's folder — parse output never crosses a process or
-    serialization boundary.  Non-admitted lines either emit a pre-fold
-    fault row (dovecot-shape IndexError, Q8/Q12) or are dropped in place."""
-    from postfix_log_parser_spark.operators.parse import _parse_row
+def _fold_fused(raw_lines: DataFrame, line_col: str) -> DataFrame:
+    """Fused parse+fold: ONE shuffle of (key, seq, raw line) — strictly
+    less volume than shuffling parsed maps and arrays — then one Python
+    stage that parses and folds in place (``_fused_batches``).
 
-    out: list = []
-    live: dict[str, _QueueFolder] = {}
-    current: list = [None]
+    The co-location key mirrors the parser's admission exactly
+    (``parse.queue_key``: token 3 when it has the Q10 queue-id shape,
+    ``lognormalizer/parse.py:237-256``), so every admitted line of a queue
+    lands in that queue's partition.  Lines without one can fold nowhere
+    (at most they emit stateless pre-fold faults) and spread over
+    synthetic keys; "\\0" can't collide with an upper-hex queue id."""
+    from postfix_log_parser_spark.operators.parse import queue_key, with_seq
 
-    def folder_of(q: str) -> _QueueFolder:
-        f = current[0]
-        if f is not None and f.queue_id == q:
-            return f
-        f = live.get(q)
-        if f is None:
-            f = _QueueFolder(q, out, dov)
-            live[q] = f
-        current[0] = f
-        return f
-
-    for pdf in batches:
-        seqs = pdf["seq"].to_numpy()
-        vals = pdf["value"].to_numpy()
-        for i in range(len(pdf)):
-            r = _parse_row(int(seqs[i]), vals[i])
-            # r = (seq, line, kind, ts, queue_id, fields, to_list,
-            #      status_desc, subject, dmsgid, daction, fault, admitted)
-            if r[12]:
-                folder_of(r[4]).feed(
-                    r[0], r[1], r[2], r[3], r[5], r[6], r[7], r[8], r[11]
-                )
-            elif r[2] == "fault":
-                # pre-fold fault (never entered state): same row shape the
-                # folders emit, so one union-free output stream
-                out.append(
-                    ("fault", r[4], None, None, None, None, None, None,
-                     None, None, r[11], r[1], r[0], None)
-                )
-        if len(out) >= 10_000:
-            yield pd.DataFrame(out, columns=_FOLD_COLUMNS)
-            out.clear()
-            for f in live.values():
-                f.out = out
-    for f in live.values():
-        f.close()
-    if out:
-        yield pd.DataFrame(out, columns=_FOLD_COLUMNS)
+    df = with_seq(raw_lines, line_col)
+    value = F.col(line_col)
+    qk = queue_key(value)
+    key = F.when(qk != "", qk).otherwise(
+        F.concat(F.lit("\x00"), F.pmod(F.col("seq"), F.lit(64)).cast("string"))
+    )
+    return (
+        df.select(key.alias("_k"), "seq", value.alias("value"))
+        .repartition(F.col("_k"))
+        .sortWithinPartitions("_k", "seq")
+        .mapInPandas(_fused_batches, FOLD_SCHEMA)
+    )
 
 
 _ENTRY_ARRAY_T = "array<struct<eseq:bigint,key:string,value:string>>"
-
-_FOLD_ROW_T = (
-    "struct<record_type:string,start_seq:bigint,timestamp:timestamp,"
-    "fields:map<string,string>,to_list:array<string>,raw_log:array<string>,"
-    "removed_seq:bigint,msgid_intervals:array<struct<msgid:string,lo:bigint,"
-    "hi:bigint>>,kv_dovecot_seq:bigint,fault_reason:string,fault_line:string,"
-    "fault_seq:bigint,dovecot_final:string>"
-)
 
 # accumulator for the per-queue linear fold: required-key presence flags
 # since the last successful boundary, successful-removed seqs, failed
@@ -553,7 +516,6 @@ def _session_row(s: Column, k: Column, bnd: Column) -> Column:
         F.lit(None).cast("string").alias("fault_reason"),
         F.lit(None).cast("string").alias("fault_line"),
         F.lit(None).cast("long").alias("fault_seq"),
-        F.lit(None).cast("string").alias("dovecot_final"),
     )
 
 
@@ -573,7 +535,6 @@ def _fault_row(reason: Column, line: Column, seq: Column) -> Column:
         reason.alias("fault_reason"),
         line.alias("fault_line"),
         seq.alias("fault_seq"),
-        F.lit(None).cast("string").alias("dovecot_final"),
     )
 
 
@@ -694,7 +655,6 @@ def _fold_native(feed: DataFrame) -> DataFrame:
         r["fault_reason"].alias("fault_reason"),
         r["fault_line"].alias("fault_line"),
         r["fault_seq"].alias("fault_seq"),
-        r["dovecot_final"].alias("dovecot_final"),
     )
 
 
@@ -733,13 +693,124 @@ def _project_events(folded: DataFrame) -> DataFrame:
     )
 
 
+# a sieve line has at least 9 tokens ("Info:", "sieve:", "msgid=",
+# "fileinto", "action:" and 4 more): 44 characters plus a terminator
+_MIN_SIEVE_LINE_BYTES = 45
+
+# The broadcast J1 dim is a hash table in one array value: entries are
+# hashed by msgid into as many buckets as there are entries, each bucket
+# led by one sentinel (dseq NULL sorts first), so after one sort the
+# sentinels' positions are the bucket starts and bucket b is array slot b.
+# Each step is its own projection, and each step's output is referenced
+# more than once by the next, so the optimizer does not inline a step into
+# a lambda, where it would be recomputed per element.
+_SIEVE_ENTRY = "struct<b:int,dseq:bigint,m:string,daction:string>"
+_BUCKET_STEPS = (
+    ["collect_list(struct(dmsgid, dseq, daction)) AS _e"],
+    ["_e", "greatest(size(_e), 1) AS _nb"],
+    [
+        f"""array_sort(concat(
+          transform(_e, x -> CAST(struct(pmod(xxhash64(x.dmsgid), _nb), x.dseq,
+                                         x.dmsgid, x.daction) AS {_SIEVE_ENTRY})),
+          transform(sequence(0, _nb - 1), b -> CAST(struct(b, NULL, NULL, NULL)
+                                                    AS {_SIEVE_ENTRY})))) AS _s"""
+    ],
+    ["_s", "filter(sequence(0, size(_s) - 1), i -> get(_s, i).dseq IS NULL) AS _starts"],
+    [
+        "transform(_starts, (s, j) -> slice(_s, s + 1,"
+        " coalesce(get(_starts, j + 1), size(_s)) - s)) AS _buckets"
+    ],
+)
+
+
+def _sieve_buckets(dim: DataFrame) -> DataFrame:
+    """One row, one column ``_buckets``: the dim as a hash table on msgid,
+    built by one global aggregate and O(n log n) array work."""
+    for step in _BUCKET_STEPS:
+        dim = dim.selectExpr(*step)
+    return dim
+
+
+# Per session, the last sieve line (max dseq) inside any of its msgid
+# validity intervals: one bucket lookup per interval (a bucket is sorted by
+# dseq, so its last hit is the interval's latest line).  The table ``_bk``
+# is read once, bound to ``bk`` by a one-element transform.
+_BEST_SIEVE = """element_at(transform(array(_bk), bk -> array_max(transform(
+  msgid_intervals, iv -> try_element_at(transform(filter(
+    get(bk, CAST(pmod(xxhash64(iv.msgid), size(bk)) AS INT)),
+    d -> d.m = iv.msgid AND d.dseq > iv.lo AND (iv.hi IS NULL OR d.dseq < iv.hi)),
+    d -> struct(d.dseq AS dseq, d.daction AS daction)), -1)))), 1)"""
+
+
+def _final_action(seq: str, action: str) -> Column:
+    """The sieve action unless a later ``dovecot_fileinto_action=`` k=v
+    token overrode it (both are plain dict assignments in the reference:
+    the later setter wins)."""
+    return F.expr(
+        f"CASE WHEN {seq} IS NOT NULL AND (kv_dovecot_seq IS NULL"
+        f" OR {seq} > kv_dovecot_seq) THEN {action}"
+        " ELSE try_element_at(fields, 'dovecot_fileinto_action') END"
+    )
+
+
+def _resolve_dovecot(
+    sessions: DataFrame, dim: DataFrame, table: Column | None
+) -> DataFrame:
+    """J1: add ``_dovecot_final`` to the folded sessions — the action of
+    the last sieve line (max dseq) inside any of the session's msgid
+    validity intervals, or the k=v fallback.  ``table``, when given, is
+    ``dim`` as a ``_sieve_buckets`` scalar subquery (the broadcast J1)."""
+    if table is not None:
+        # ``_bk`` has one reference, so the optimizer folds the subquery
+        # into the lambda and every row reads the value in place; a
+        # projected or joined column would be copied into each row,
+        # because the lambdas run outside generated code
+        return (
+            sessions.select("*", table.alias("_bk"))
+            .select(*sessions.columns, F.expr(_BEST_SIEVE).alias("_best"))
+            .select(
+                *sessions.columns,
+                _final_action("_best.dseq", "_best.daction").alias("_dovecot_final"),
+            )
+        )
+    # scale path: never holds the dim in one task.  Explode the intervals
+    # (bounded: one per message-id assignment), join the dim on msgid with
+    # the range predicate (AQE picks the strategy at run time), keep the
+    # last matching sieve line per session.  (queue_id, start_seq)
+    # identifies a session; its exploded rows all carry its columns.
+    key = ["queue_id", "start_seq"]
+    rest = [c for c in sessions.columns if c not in key]
+    iv = F.col("_iv")
+    return (
+        sessions.select("*", F.explode_outer("msgid_intervals").alias("_iv"))
+        .join(
+            dim,
+            (iv["msgid"] == F.col("dmsgid"))
+            & (F.col("dseq") > iv["lo"])
+            & (iv["hi"].isNull() | (F.col("dseq") < iv["hi"])),
+            "left",
+        )
+        .groupBy(*key)
+        .agg(
+            *[F.first(c).alias(c) for c in rest],
+            F.max("dseq").alias("_best_dseq"),
+            F.max_by("daction", "dseq").alias("_best_daction"),
+        )
+        .select(
+            *key,
+            *rest,
+            _final_action("_best_dseq", "_best_daction").alias("_dovecot_final"),
+        )
+    )
+
+
 def sessionize(
     parsed: DataFrame,
     keep_order_columns: bool = False,
     use_native: bool | None = None,
     fold: str = "partitioned",
     raw_lines: DataFrame | None = None,
-    max_broadcast_dovecot: int = 500_000,
+    max_broadcast_dovecot: int = 100_000,
     materialize_fold: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Sessionize a parsed-line DataFrame.
@@ -757,199 +828,105 @@ def sessionize(
     Set ``keep_order_columns=True`` to retain ``_start_seq``/``_removed_seq``
     on events (deterministic ordering for tests).
 
-    ``max_broadcast_dovecot`` guards the J1 broadcast: up to that many
-    sieve lines ride a single sorted broadcast array (the fast path —
-    sieve lines are a small fraction of real logs); above it, sessionize
-    switches to the interval equi-join fallback, which shuffles instead
-    of broadcasting and never materializes the dim in one task.
-    """
-    # faults raised before any state effect (dovecot-shape IndexError):
-    pre_faults = parsed.filter(
-        (F.col("kind") == "fault") & ~F.col("admitted")
-    ).select(
-        F.col("line"),
-        F.col("fault_reason"),
-        F.col("queue_id"),
-    )
+    ``parsed`` fuses with the fold only when it is the unmodified output of
+    ``parse_lines_arrow(raw_lines)`` and the fold is ``partitioned``; any
+    other ``parsed`` keeps its own plan.  With ``raw_lines`` the sieve dim
+    comes from a narrow Catalyst scan of the raw text
+    (``dovecot_dim_from_raw``), else from ``parsed``.
 
-    feed = parsed.filter(F.col("admitted")).select(
-        "seq",
-        "line",
-        "kind",
-        "timestamp",
-        "queue_id",
-        "fields",
-        "to_list",
-        "status_description",
-        "subject",
-        "fault_reason",
-    )
+    ``max_broadcast_dovecot`` bounds the J1 broadcast: the dim becomes one
+    hash-table value only when the input's plan proves it holds at most
+    that many sieve lines (``planned_line_bound``: 45 bytes or more per
+    sieve line of an uncompressed file, one per in-memory line);
+    otherwise, and for inputs whose size the plan does not tell
+    (compressed files, RDDs), J1 joins the exploded intervals to the dim
+    and never materializes it in one task.  The default keeps the table
+    to a few MB (at ~420k sieve lines its build ran a 1 GiB driver out of
+    heap, and the join J1 cost the same CPU).
+
+    ``materialize_fold=True`` checkpoints the fold eagerly (one job), so
+    callers that then materialize all three outputs run it once.
+    """
+    from postfix_log_parser_spark.operators.parse import dovecot_dim_from_raw
+    from postfix_log_parser_spark.sources.text import planned_line_bound
+
     if use_native is not None:  # back-compat switch used by the test oracle
         fold = "catalyst" if use_native else "pandas"
-
-    # ---- J1 dim, probed BEFORE the fold: the default fold resolves the
-    # correlation in-fold from a broadcast hash map (see
-    # ``_fold_partitioned``).  Dovecot lines are filtered on dovecot_msgid
-    # (≡ kind='dovecot' but prunes to a scan + token-shape predicates only
-    # — no timestamp/queue-id regex work).  With raw_lines provided (the
-    # Arrow-parse fast path), the dim comes from a cheap substring scan of
-    # the raw text instead — the Arrow parse is opaque to Catalyst, so
-    # filtering `parsed` would re-run it.
-    if raw_lines is not None:
-        from postfix_log_parser_spark.operators.parse import dovecot_dim_from_raw
-
-        dov_src = dovecot_dim_from_raw(raw_lines)
+    source = getattr(parsed, "_arrow_parse_of", None)
+    line_col = source[1] if source is not None else "value"
+    pre_faults = None
+    if fold == "partitioned" and source is not None and source[0] is raw_lines:
+        folded = _fold_fused(raw_lines, line_col)
     else:
-        dov_src = parsed.filter(F.col("dovecot_msgid").isNotNull())
-    dov_src = dov_src.select(
+        # faults raised before any state effect (dovecot-shape IndexError)
+        pre_faults = parsed.filter(
+            (F.col("kind") == "fault") & ~F.col("admitted")
+        ).select("line", "fault_reason", "queue_id")
+        feed = parsed.filter(F.col("admitted")).select(
+            "seq",
+            "line",
+            "kind",
+            "timestamp",
+            "queue_id",
+            "fields",
+            "to_list",
+            "status_description",
+            "subject",
+            "fault_reason",
+        )
+        if fold == "partitioned":
+            folded = _fold_partitioned(feed)
+        elif fold == "catalyst":
+            folded = _fold_native(feed)
+        elif fold == "pandas":
+            folded = feed.groupBy("queue_id").applyInPandas(_fold_group, FOLD_SCHEMA)
+        else:  # pragma: no cover - guard
+            raise ValueError(f"unknown fold strategy: {fold}")
+
+    if materialize_fold:
+        # events, faults and state all derive from ``folded``: one eager
+        # checkpoint turns the triple into narrow reads of one fold run
+        folded = folded.localCheckpoint(eager=True)
+
+    if raw_lines is not None:
+        dim = dovecot_dim_from_raw(raw_lines, line_col)
+    else:
+        dim = parsed.filter(F.col("dovecot_msgid").isNotNull())
+    dim = dim.select(
         F.col("seq").alias("dseq"),
         F.col("dovecot_msgid").alias("dmsgid"),
         F.col("dovecot_action").alias("daction"),
     )
-    # ONE bounded probe job sizes the dim AND (fast path) fetches it:
-    # limit(max+1).collect() either returns the whole dim (<= max rows,
-    # which the fast path needs driver-side anyway to build the broadcast)
-    # or proves it oversized.  No persist — nothing cached to leak; the
-    # rare dovecot-heavy fallback re-scans the dim inside its equi-join
-    # (the probe itself stopped after max+1 rows, so at most one full
-    # dim scan ever runs).
-    dov_rows = dov_src.limit(max_broadcast_dovecot + 1).collect()
-    n_dov = len(dov_rows)
-
-    # executor-local hash map {msgid: (sorted dseqs, actions)} for the
-    # in-fold resolution — only the default fold takes it; the catalyst /
-    # pandas oracle folds keep the Catalyst correlation stage below
-    fold_dov_bc = None
-    if fold == "partitioned" and n_dov <= max_broadcast_dovecot:
-        dov_map: dict[str, tuple[list, list]] = {}
-        for r in sorted(dov_rows, key=lambda r: r["dseq"]):
-            ent = dov_map.setdefault(r["dmsgid"], ([], []))
-            ent[0].append(r["dseq"])
-            ent[1].append(r["daction"])
-        fold_dov_bc = parsed.sparkSession.sparkContext.broadcast(dov_map)
-
-    if fold == "partitioned":
-        folded = _fold_partitioned(feed, fold_dov_bc)
-    elif fold == "catalyst":
-        folded = _fold_native(feed)
-    elif fold == "pandas":
-        folded = feed.groupBy("queue_id").applyInPandas(_fold_group, FOLD_SCHEMA)
-    else:  # pragma: no cover - guard
-        raise ValueError(f"unknown fold strategy: {fold}")
-
-    if materialize_fold:
-        # callers that materialize all three outputs (eager checkpoints,
-        # multi-output sinks) otherwise execute the fold once PER OUTPUT
-        # — events, faults and state are all derived from ``folded``, so
-        # one eager checkpoint here turns the triple into narrow reads
-        # of the same materialized fold (r13; the fixture pipeline paid
-        # 3 full parse+fold executions per fill)
-        folded = folded.localCheckpoint(eager=True)
-
-    # ---- J1: dovecot sieve correlation — applied to the folded sessions
-    # (unless the fold already resolved it in-fold, the default path).
-    # All strategies replace the reference's O(open-sessions) linear scan
-    # per dovecot line (parse.py:373-375).
-    sessions = folded.filter(F.col("record_type") != "fault")
-    kv_fallback = F.try_element_at(
-        F.col("fields"), F.lit("dovecot_fileinto_action")
+    n_sieve = planned_line_bound(
+        parsed if raw_lines is None else raw_lines, _MIN_SIEVE_LINE_BYTES
     )
-    # the later setter wins: a k=v dovecot_fileinto_action=... token vs
-    # the dovecot handler (both plain dict assignments in the reference)
-    def _final(best_seq: Column, best_action: Column) -> Column:
-        return F.when(
-            best_seq.isNotNull()
-            & (
-                F.col("kv_dovecot_seq").isNull()
-                | (best_seq > F.col("kv_dovecot_seq"))
-            ),
-            best_action,
-        ).otherwise(kv_fallback)
+    table = None
+    if n_sieve is not None and n_sieve <= max_broadcast_dovecot:
+        # Folding the subquery into the lookup lambda needs a deterministic
+        # plan, and the dim's seq comes from scan metadata.  A lazy local
+        # checkpoint makes the dim a plain RDD leaf: no job here, the first
+        # action fills it, and events and state then read the same dim.
+        table = _sieve_buckets(dim.localCheckpoint(eager=False)).scalar()
 
-    if fold_dov_bc is not None:
-        # in-fold resolution already happened inside _fold_partitioned:
-        # the fold rows carry the final action — no Catalyst correlation
-        # stage at all (and no per-session scan of the sieve dim, which
-        # is interpreted and O(sessions x sieve-lines))
-        sessions = sessions.withColumn("_dovecot_final", F.col("dovecot_final"))
-    elif n_dov == 0:
-        # no sieve lines at all (the common real-log case): the later-
-        # setter rule degenerates to the k=v fallback — no join, no
-        # broadcast, the sessions plan is untouched.
-        sessions = sessions.withColumn("_dovecot_final", kv_fallback)
-    elif n_dov <= max_broadcast_dovecot:
-        # fast path: the whole dim (already on the driver from the probe)
-        # rides ONE sorted broadcast array and is matched per session
-        # with an array expression over the msgid validity intervals —
-        # the folded sessions are consumed exactly once (no explode +
-        # join-back, which would re-execute the fold aggregate).
-        dovs = parsed.sparkSession.createDataFrame(
-            [
-                (
-                    sorted(
-                        ((r["dseq"], r["dmsgid"], r["daction"]) for r in dov_rows),
-                        key=lambda t: t[0],  # dseq is globally unique
-                    ),
-                )
-            ],
-            "_dovs array<struct<dseq:long,dmsgid:string,daction:string>>",
+    def resolved(record_type: str) -> DataFrame:
+        # J1 below the filter: each output resolves only its own sessions
+        return _resolve_dovecot(
+            folded.filter(F.col("record_type") == record_type), dim, table
         )
-        sessions = sessions.crossJoin(F.broadcast(dovs))
-        ivs = F.col("msgid_intervals")
-        best = F.try_element_at(
-            F.filter(
-                F.col("_dovs"),
-                lambda d: F.exists(
-                    ivs,
-                    lambda iv: (iv["msgid"] == d["dmsgid"])
-                    & (d["dseq"] > iv["lo"])
-                    & (iv["hi"].isNull() | (d["dseq"] < iv["hi"])),
-                ),
-            ),
-            F.lit(-1),
-        )
-        sessions = sessions.withColumn(
-            "_dovecot_final", _final(best["dseq"], best["daction"])
-        ).drop("_dovs")
-    else:
-        # dovecot-heavy fallback: shuffle interval equi-join on msgid.
-        # Explode each session's msgid validity intervals (bounded: one
-        # per message-id assignment), equi-join the dim on msgid with the
-        # (lo, hi) range predicate, keep the LAST matching sieve line per
-        # session, and join back on the (queue_id, start_seq) session key.
-        # The join-back consumes the fold aggregate a second time — the
-        # price of never materializing the dim in one task.
-        iv = sessions.select(
-            "queue_id",
-            "start_seq",
-            F.explode("msgid_intervals").alias("_iv"),
-        )
-        cand = iv.join(dov_src, iv["_iv"]["msgid"] == dov_src["dmsgid"]).filter(
-            (F.col("dseq") > F.col("_iv")["lo"])
-            & (F.col("_iv")["hi"].isNull() | (F.col("dseq") < F.col("_iv")["hi"]))
-        )
-        best_per_session = cand.groupBy("queue_id", "start_seq").agg(
-            F.max("dseq").alias("_best_dseq"),
-            F.max_by("daction", "dseq").alias("_best_daction"),
-        )
-        sessions = sessions.join(
-            best_per_session, ["queue_id", "start_seq"], "left"
-        ).withColumn(
-            "_dovecot_final", _final(F.col("_best_dseq"), F.col("_best_daction"))
-        ).drop("_best_dseq", "_best_daction")
 
-    events = _project_events(sessions.filter(F.col("record_type") == "event"))
+    events = _project_events(resolved("event"))
     if not keep_order_columns:
         events = events.select(*EVENT_COLUMNS)
 
-    fold_faults = folded.filter(F.col("record_type") == "fault").select(
+    faults = folded.filter(F.col("record_type") == "fault").select(
         F.col("fault_line").alias("line"),
         F.col("fault_reason"),
         F.col("queue_id"),
     )
-    faults = pre_faults.unionByName(fold_faults)
+    if pre_faults is not None:
+        faults = pre_faults.unionByName(faults)
 
-    state = sessions.filter(F.col("record_type") == "state").select(
+    state = resolved("state").select(
         "queue_id",
         "timestamp",
         "fields",
@@ -964,108 +941,15 @@ def sessionize_raw(
     raw_lines: DataFrame,
     line_col: str = "value",
     keep_order_columns: bool = False,
-    max_broadcast_dovecot: int = 500_000,
+    max_broadcast_dovecot: int = 100_000,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Fused parse+sessionize engine — the throughput path.
+    """Parse and sessionize raw lines: the fused plan of
+    ``sessionize(parse_lines_arrow(raw_lines), raw_lines=raw_lines)``."""
+    from postfix_log_parser_spark.operators.parse import parse_lines_arrow
 
-    ``sessionize(parse_lines_arrow(raw), raw_lines=raw)`` runs parse and
-    fold as two Python stages with a shuffle of the PARSED payload (maps,
-    arrays, strings) between them: every admitted line's fields map is
-    Arrow-serialized out of the parse worker, shuffled, and deserialized
-    into the fold worker.  This fused engine instead shuffles the RAW
-    line keyed by a Catalyst-extracted queue-id candidate, and one Python
-    stage parses and folds in place (``_fused_batches``) — parse output
-    never crosses a serialization boundary, and the dovecot correlation
-    resolves in-fold from the broadcast msgid map.
-
-    The co-location key mirrors the parser's admission exactly: token 3
-    of the Python-whitespace tokenization when it matches the Q10 queue-id
-    shape (``lognormalizer/parse.py:237-256``); every admitted line of a
-    queue therefore lands in that queue's partition.  Non-admitted lines
-    spread over synthetic keys (they only ever emit stateless pre-fold
-    faults).  Scale shape: ONE shuffle of (key, seq, line) — strictly
-    less shuffle volume than the unfused path — then a linear in-memory
-    pass; uniform hex keys, no skew.
-
-    Falls back to the unfused path when the sieve dim exceeds the
-    broadcast bound.  Differentially tested against the unfused engine on
-    every golden fixture (``tests/test_fused.py``).
-    """
-    from postfix_log_parser_spark.operators.parse import (
-        _QUEUE_ID_RE,
-        _WS,
-        dovecot_dim_from_raw,
-        with_seq,
+    return sessionize(
+        parse_lines_arrow(raw_lines, line_col),
+        keep_order_columns=keep_order_columns,
+        raw_lines=raw_lines,
+        max_broadcast_dovecot=max_broadcast_dovecot,
     )
-
-    spark = raw_lines.sparkSession
-    dov_src = dovecot_dim_from_raw(raw_lines, line_col).select(
-        F.col("seq").alias("dseq"),
-        F.col("dovecot_msgid").alias("dmsgid"),
-        F.col("dovecot_action").alias("daction"),
-    )
-    dov_rows = dov_src.limit(max_broadcast_dovecot + 1).collect()
-    if len(dov_rows) > max_broadcast_dovecot:
-        # dovecot-heavy log: delegate to the unfused engine's interval
-        # equi-join fallback rather than holding an oversized dict
-        from postfix_log_parser_spark.operators.parse import parse_lines_arrow
-
-        return sessionize(
-            parse_lines_arrow(raw_lines, line_col),
-            keep_order_columns=keep_order_columns,
-            raw_lines=raw_lines,
-            max_broadcast_dovecot=max_broadcast_dovecot,
-        )
-
-    dov_map: dict[str, tuple[list, list]] = {}
-    for r in sorted(dov_rows, key=lambda r: r["dseq"]):
-        ent = dov_map.setdefault(r["dmsgid"], ([], []))
-        ent[0].append(r["dseq"])
-        ent[1].append(r["daction"])
-    dov_bc = spark.sparkContext.broadcast(dov_map)
-
-    df = with_seq(raw_lines, line_col)
-    if line_col != "value":
-        df = df.withColumnRenamed(line_col, "value")
-    # token 3 of the Python-whitespace tokenization iff it has the Q10
-    # shape (trim+split+index measures ~3x faster than one anchored
-    # regex here: the big Unicode class makes per-line regex scans slow)
-    trimmed = F.regexp_replace(F.col("value"), f"^{_WS}+|{_WS}+$", "")
-    tok3 = F.get(F.split(trimmed, f"{_WS}+"), 3)
-    t3 = F.when(tok3.rlike(_QUEUE_ID_RE), F.substring(tok3, 1, 11)).otherwise(
-        F.lit("")
-    )
-    key = F.when(t3 != "", t3).otherwise(
-        # non-queue lines can fold nowhere; spread them over synthetic
-        # keys ("\0" can't collide with an upper-hex queue id)
-        F.concat(F.lit("\x00"), F.pmod(F.col("seq"), F.lit(64)).cast("string"))
-    )
-    arranged = (
-        df.select(key.alias("_k"), "seq", "value")
-        .repartition(F.col("_k"))
-        .sortWithinPartitions("_k", "seq")
-    )
-    folded = arranged.mapInPandas(
-        lambda batches: _fused_batches(batches, dov_bc.value), FOLD_SCHEMA
-    )
-
-    sessions = folded.filter(F.col("record_type") != "fault").withColumn(
-        "_dovecot_final", F.col("dovecot_final")
-    )
-    events = _project_events(sessions.filter(F.col("record_type") == "event"))
-    if not keep_order_columns:
-        events = events.select(*EVENT_COLUMNS)
-    faults = folded.filter(F.col("record_type") == "fault").select(
-        F.col("fault_line").alias("line"),
-        F.col("fault_reason"),
-        F.col("queue_id"),
-    )
-    state = sessions.filter(F.col("record_type") == "state").select(
-        "queue_id",
-        "timestamp",
-        "fields",
-        "to_list",
-        "raw_log",
-        F.col("_dovecot_final").alias("dovecot_fileinto_action"),
-    )
-    return events, faults, state

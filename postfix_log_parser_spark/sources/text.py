@@ -4,160 +4,208 @@ The reference slurps all of stdin with ``readlines()``
 (``lognormalizer/parse.py:515-516``); here the input is a partitioned
 Spark text scan.  Line order is semantic (quirks Q1-Q3: last-wins folds,
 first-timestamp, raw_log order), so every source attaches an explicit
-``seq`` — and the ordering must hold for multi-file and multi-split
-inputs, where Spark packs splits by size (descending), not scan order.
+``seq`` — an order key, strictly increasing in (file name, in-file
+position) order, with gaps: not a dense row number.  The ordering must
+hold for multi-file and multi-split inputs, where Spark packs splits by
+size (descending), not scan order.
 
-``read_text`` derives a deterministic global seq with NO shuffle of the
-data and no global sort:
+``read_text`` builds ``seq`` from planning-time data only.  No Spark job
+runs before the caller's own action, and the data is never shuffled or
+sorted:
 
-1. tag each row with ``(input_file_name, input_file_block_start,
-   monotonically_increasing_id)`` — rows within one scan partition (one
-   split) are in file order, and the mono id is monotone within it;
-2. aggregate per-split metadata (row count + min mono id) — a small
-   aggregate with one row per split;
-3. number the splits cumulatively in ``(file, block_start)`` order — a
-   window over the tiny split list, not the data;
-4. broadcast-join the offsets back: ``seq = split_row_offset + (mono -
-   min_mono)``.
+1. the planned scan's splits — Spark's own ``FilePartition`` list,
+   computed from the file listing when the plan is built — are numbered
+   in ``(file name, start)`` order: the split ordinal;
+2. each row looks its ordinal up by ``(input_file_name(),
+   input_file_block_start())``, in a literal map (or, past
+   ``max_literal_splits``, a broadcast join of the split list);
+3. ``seq = ordinal << 33 | row``, where ``row`` is the low 33 bits of
+   ``monotonically_increasing_id()``: the row's position in its scan
+   partition.
 
-Cost: one extra pass over the text for the metadata aggregate (cheap
-narrow scan); the data itself is never shuffled or sorted.  Determinism
-relies on Spark's split planning being deterministic for a fixed file
-listing (it is: splits are computed from sizes and packed in sorted
-order), so both scans see identical (file, block, mono) assignments.
+Why this preserves order although one partition may hold several
+splits: a split is read whole, by one task, front to back, so the rows of
+one split share a partition and their ``row`` values increase in file
+order; rows of different splits compare by ordinal first.  The bit budget
+is checked, not assumed: more than 2**30 splits raise at planning, and a
+partition past 2**33 rows raises ``SEQ_ROW_OVERFLOW`` at execution.
+
+A split the listing never planned (the input changed, or split-size
+confs changed, between ``read_text`` and the action) raises
+``SEQ_SPLIT_DRIFT`` instead of producing a NULL or colliding ``seq``.
+
+``planned_line_bound`` reads, from any DataFrame's planned leaves, an
+upper bound on how many of its source lines can be at least ``n`` bytes
+long (None when the plan does not tell: compressed files, foreign
+sources).  Sessionize uses it to prove, before anything runs, that the
+sieve dim is small enough to broadcast.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from postfix_log_parser_spark.functions.columns import sql_str
+
+# monotonically_increasing_id() = partition id << 33 | row in partition
+_ROW_BITS = 33
+_ORD_LIMIT = 1 << (63 - _ROW_BITS)
 
 
 def read_text(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     ordered: bool = True,
     max_literal_splits: int = 4096,
 ) -> DataFrame:
-    """Batch text source: one ``value`` string column plus a global ``seq``
-    consistent with (file name, in-file position) order.
+    """Batch text source: one ``value`` string column plus ``seq``, an
+    order key following (file name, in-file position) order.
 
-    ``ordered=False`` skips the metadata pass and uses the raw
-    ``monotonically_increasing_id`` — only safe when downstream ignores
-    cross-line ordering (e.g. pure filtering/counting jobs).
+    ``ordered=False`` uses the raw ``monotonically_increasing_id`` — only
+    safe when downstream ignores cross-line ordering (e.g. pure
+    filtering/counting jobs).
 
-    Two seq-attach strategies, switched on split count:
-
-    * ``<= max_literal_splits`` — the per-split offsets are resolved
-      EAGERLY (one tiny metadata job, one row per split) and embedded as
-      a literal map, so downstream consumers scan the data exactly once.
-      Driver cost is O(#splits) — bounded by the threshold.  A split key
-      missing from the map (the input dir changed between ``read_text``
-      and a later action — rotated/appended log files) raises
-      ``SEQ_SPLIT_DRIFT`` at execution instead of silently producing
-      NULL seq and corrupting the order-sensitive fold.  The default
-      threshold (4096 splits ≈ 512 GB at 128 MB splits) keeps the
-      ``CreateMap`` expression tree well under the 64KB whole-stage-
-      codegen method limit — a larger literal map silently drops the
-      projection to interpreted eval AND re-serializes the map into
-      every task.
-    * ``> max_literal_splits`` — offsets stay distributed: the same
-      per-split aggregate feeds a window over the split list and
-      broadcast-joins back onto the scan.  No driver materialization
-      and no outsized expression tree; the metadata subplan re-executes
-      per downstream action (the price of staying fully lazy at that
-      scale).
+    Up to ``max_literal_splits`` splits the ordinals ride a literal map
+    (the default 4096 keeps the ``CreateMap`` tree well under the 64KB
+    whole-stage-codegen method limit); past it, a broadcast join of the
+    split list.  Both give the same ``seq``.
     """
     df = spark.read.text(path)
     if not ordered:
         return df.withColumn("seq", F.monotonically_increasing_id())
-    tagged = (
-        df.withColumn("_file", F.input_file_name())
-        .withColumn("_block", F.expr("input_file_block_start()"))
-        .withColumn("_mono", F.monotonically_increasing_id())
-    )
-    # cheap split-count gate: planned scan partitions (no job).  Split
-    # keys can exceed partition count when many small files pack into one
-    # partition, so the post-collect length check below is the backstop.
-    if df.rdd.getNumPartitions() > max_literal_splits:
-        return _attach_seq_join(tagged)
-    meta = (
-        tagged.groupBy("_file", "_block")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("_mono").alias("min_mono"))
-        .collect()
-    )
-    if len(meta) > max_literal_splits:
-        return _attach_seq_join(tagged)
-    meta.sort(key=lambda r: (r["_file"], r["_block"]))
-    adjust: dict[str, int] = {}
-    offset = 0
-    for r in meta:
-        adjust[f"{r['_file']}@{r['_block']}"] = offset - r["min_mono"]
-        offset += r["n"]
-    if not adjust:
-        return df.withColumn("seq", F.lit(None).cast("long")).limit(0).select(
-            "value", "seq"
+    splits = sorted(_planned_files(df))
+    if len(splits) >= _ORD_LIMIT:
+        raise ValueError(
+            f"SEQ_BIT_BUDGET: {len(splits)} splits exceed the 2**30 split "
+            "ordinals seq can encode"
         )
-    return _attach_seq_literal(tagged, adjust)
+    if not splits:
+        return df.withColumn("seq", F.lit(None).cast("long")).limit(0)
+    tagged = df.selectExpr(
+        "value",
+        "input_file_name() AS _file",
+        "input_file_block_start() AS _block",
+        "monotonically_increasing_id() AS _mono",
+    )
+    ordinals = {f"{f}@{start}": i for i, (f, start) in enumerate(splits)}
+    if len(ordinals) > max_literal_splits:
+        return _attach_seq_join(tagged, ordinals)
+    return _attach_seq_literal(tagged, ordinals)
 
 
-def _attach_seq_literal(tagged: DataFrame, adjust: dict[str, int]) -> DataFrame:
-    """Embed per-split offsets as a literal map; fail fast (not NULL-seq)
-    on a split key the eager metadata pass never saw."""
-    pairs: list = []
-    for k, v in adjust.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v))
-    adj_map = F.create_map(*pairs)
-    key = F.concat_ws("@", F.col("_file"), F.col("_block"))
-    offset = F.coalesce(
-        adj_map[key],
-        F.raise_error(
-            F.concat(
-                F.lit("SEQ_SPLIT_DRIFT: unknown split "),
-                key,
-                F.lit(
-                    " — input files changed between read_text() and this "
-                    "action; re-create the DataFrame"
-                ),
-            )
-        ).cast("long"),
-    )
-    return tagged.withColumn("seq", (F.col("_mono") + offset).cast("long")).select(
-        "value", "seq"
+def _plan_leaves(df: DataFrame) -> list:
+    """The leaves of ``df``'s physical plan.  Planning only, no job."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    return [leaves.apply(i) for i in range(leaves.size())]
+
+
+def _file_splits(leaf) -> list:
+    """The planned splits (``PartitionedFile``) a file-scan leaf reads."""
+    return [pf for part in leaf.inputRDD().partitions() for pf in part.files()]
+
+
+def _planned_files(df: DataFrame) -> list[tuple[str, int]]:
+    """(file, start) of every split the file scans of ``df`` will read."""
+    return [
+        (pf.filePath().toString(), int(pf.start()))
+        for leaf in _plan_leaves(df)
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec"
+        for pf in _file_splits(leaf)
+    ]
+
+
+def planned_line_bound(df: DataFrame, min_line_bytes: int) -> int | None:
+    """Upper bound, known at planning, on how many source lines of ``df``
+    hold at least ``min_line_bytes`` bytes (terminator included).  Every
+    leaf of the physical plan must tell: an uncompressed file scan counts
+    its bytes, one more per file (whose last line may lack a terminator),
+    a local relation (``lines_df``) its rows.  None for anything else: a
+    compressed file, an RDD, a foreign source.  A leaf read twice counts
+    twice, so filters and unions of a source keep a valid bound.  No job
+    runs."""
+    from py4j.java_gateway import JavaClass
+
+    n_rows, files = 0, {}
+    for i, leaf in enumerate(_plan_leaves(df)):
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LocalTableScanExec":
+            n_rows += leaf.rows().size()
+        elif kind == "FileSourceScanExec":
+            for pf in _file_splits(leaf):
+                files[(i, pf.filePath().toString())] = pf
+        else:
+            return None
+    if files:
+        sc = df.sparkSession.sparkContext
+        # a fully qualified JavaClass: resolving ``sc._jvm.org.apache...``
+        # walks the package path with failing class lookups over the classpath
+        codecs = JavaClass(
+            "org.apache.hadoop.io.compress.CompressionCodecFactory",
+            sc._gateway._gateway_client,
+        )(sc._jsc.hadoopConfiguration())
+        if any(codecs.getCodec(pf.toPath()) is not None for pf in files.values()):
+            return None
+    n_bytes = sum(int(pf.fileSize()) + 1 for pf in files.values())
+    return n_rows + n_bytes // min_line_bytes
+
+
+_SPLIT_KEY = "concat_ws('@', _file, _block)"
+
+
+def _seq(ordinal: str) -> Column:
+    """``ordinal << 33 | row`` (SQL text in, Column out); raises past the
+    per-partition row budget, where a partition's ``_mono`` would reach the
+    next partition's id range."""
+    return F.expr(
+        f"shiftleft({ordinal}, {_ROW_BITS}) | CASE"
+        f" WHEN _mono >= shiftleft(spark_partition_id() + 1L, {_ROW_BITS})"
+        " THEN CAST(raise_error('SEQ_ROW_OVERFLOW: a scan partition holds"
+        " more than 2**33 lines') AS BIGINT)"
+        f" ELSE _mono & {(1 << _ROW_BITS) - 1}L END"
     )
 
 
-def _attach_seq_join(tagged: DataFrame) -> DataFrame:
-    """Distributed offset attach: window the per-split aggregate (one row
-    per split) into cumulative offsets, broadcast-join back on the split
-    key.  The window sorts only the split list, never the data."""
-    meta = tagged.groupBy("_file", "_block").agg(
-        F.count(F.lit(1)).alias("_n"), F.min("_mono").alias("_min_mono")
+def _drift(key: str) -> str:
+    return (
+        "CAST(raise_error(concat('SEQ_SPLIT_DRIFT: unknown split ', "
+        f"{key}, ' - input files changed between read_text() and this "
+        "action; re-create the DataFrame')) AS BIGINT)"
     )
-    w = Window.orderBy("_file", "_block").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = meta.select(
-        "_file",
-        "_block",
-        (F.coalesce(F.sum("_n").over(w), F.lit(0)) - F.col("_min_mono")).alias(
-            "_adj"
-        ),
+
+
+def _attach_seq_literal(tagged: DataFrame, ordinals: dict[str, int]) -> DataFrame:
+    """Look split ordinals up in a literal map; fail fast (not NULL-seq)
+    on a split key the planned listing does not hold."""
+    entries = ", ".join(f"{sql_str(k)}, {v}L" for k, v in ordinals.items())
+    ordinal = f"coalesce(map({entries})[{_SPLIT_KEY}], {_drift(_SPLIT_KEY)})"
+    return tagged.select("value", _seq(ordinal).alias("seq"))
+
+
+def _attach_seq_join(tagged: DataFrame, ordinals: dict[str, int]) -> DataFrame:
+    """Distributed ordinal lookup: broadcast-join the planned split list
+    (driver-local rows, no job) on the split key."""
+    splits = tagged.sparkSession.createDataFrame(
+        list(ordinals.items()), "_key string, _ord long"
     )
     return (
-        tagged.join(F.broadcast(offsets), ["_file", "_block"])
-        .withColumn("seq", (F.col("_mono") + F.col("_adj")).cast("long"))
-        .select("value", "seq")
+        tagged.withColumn("_key", F.expr(_SPLIT_KEY))
+        .join(F.broadcast(splits), "_key", "left")
+        .select("value", _seq(f"coalesce(_ord, {_drift('_key')})").alias("seq"))
     )
 
 
 def lines_df(spark: SparkSession, lines: list[str]) -> DataFrame:
-    """Library/test source: parallelize in-memory lines with their order."""
-    return spark.createDataFrame(
-        [(i, line) for i, line in enumerate(lines)], "seq long, value string"
-    )
+    """Library/test source: in-memory lines with their order, as a local
+    relation (its row count bounds the plan, see ``planned_line_bound``)."""
+    import pyarrow as pa
+
+    try:
+        values = pa.array(lines, pa.string())
+    except UnicodeEncodeError:  # lone surrogates are not valid UTF-8
+        return spark.createDataFrame(list(enumerate(lines)), "seq long, value string")
+    seqs = pa.array(range(len(lines)), pa.int64())
+    return spark.createDataFrame(pa.table({"seq": seqs, "value": values}))
 
 
 def read_text_stream(spark: SparkSession, path: str) -> DataFrame:

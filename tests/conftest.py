@@ -1,5 +1,6 @@
 import datetime
 import os
+import re
 
 import pytest
 
@@ -49,10 +50,12 @@ _SLOW_SCENARIOS = {
     "test_layout_migration_resumable_and_probe_follows_manifest",
     "test_takedown_crash_after_rewrites_before_stats_still_decrements",
     "test_takedown_crash_before_apply_recovers_from_frozen_txn",
-    "test_fused_oversized_dim_falls_back",
     "test_fuzz_stream_matches_batch",
     "test_fuzz_stream_multifile_ties_match_batch",
 }
+
+
+_QUERY_PARAM = re.compile(r"q\d+[a-z]*_")
 
 
 def _default_lane_skips(item) -> bool:
@@ -62,16 +65,30 @@ def _default_lane_skips(item) -> bool:
         return True
     if name in _SLOW_SCENARIOS:
         return True
+    param = nodeid.split("[", 1)[1].rstrip("]") if "[" in nodeid else ""
+    if not _QUERY_PARAM.match(param):
+        return False  # the representative filter only thins query sweeps
     for f in _SWEEP_FILES:
         if nodeid.startswith(f):
-            param = nodeid.split("[", 1)[1].rstrip("]") if "[" in nodeid else ""
-            qname = param.split("-")[0]
-            if qname not in SWEEP_REPRESENTATIVES:
+            if param.split("-")[0] not in SWEEP_REPRESENTATIVES:
                 return True
             # fuzz runs three seeds per query: keep one per representative
             if f.endswith("test_fuzz_analytics.py") and not param.endswith("-7"):
                 return True
     return False
+
+
+def _explicit_node_ids(config) -> list[str]:
+    """Command-line arguments naming a test (``path::name[...]``), as node
+    ids relative to the rootdir."""
+    ids = []
+    for arg in config.args:
+        if "::" not in arg:
+            continue
+        path, rest = arg.split("::", 1)
+        rel = os.path.relpath(os.path.abspath(path), str(config.rootpath))
+        ids.append(rel.replace(os.sep, "/") + "::" + rest)
+    return ids
 
 
 def pytest_collection_modifyitems(config, items):
@@ -82,13 +99,19 @@ def pytest_collection_modifyitems(config, items):
     every operator family) and the heavyweight restart/compaction
     scenarios; ``SPARK_GRAFT_FULL_TESTS=1`` runs everything, and the
     builder records a full run per round (r13: 1753+3 passed / 53 min)."""
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
+    # a test selected explicitly, by node id or with -k, always runs
+    if os.environ.get("SPARK_GRAFT_FULL_TESTS") or config.option.keyword:
         return
+    explicit = _explicit_node_ids(config)
     skip = pytest.mark.skip(
         reason="slow lane (set SPARK_GRAFT_FULL_TESTS=1 for the full suite)"
     )
     for item in items:
-        if _default_lane_skips(item):
+        chosen = any(
+            item.nodeid == e or item.nodeid.startswith((e + "[", e + "::"))
+            for e in explicit
+        )
+        if not chosen and _default_lane_skips(item):
             item.add_marker(skip)
 
 

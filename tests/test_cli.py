@@ -94,11 +94,11 @@ def test_cli_batch_out(spark, tmp_path):
     assert [r["queue_id"] for r in state.collect()] == ["BBBBBBBBBBB"]
 
 
-def test_cli_batch_out_fused_engine(spark, tmp_path):
+def test_cli_batch_out_catalyst_engine(spark, tmp_path):
     log = tmp_path / "mail.log"
     log.write_text(LOG)
-    out = tmp_path / "out_fused"
-    assert main([str(log), "--out", str(out), "--engine", "fused"]) == 0
+    out = tmp_path / "out_catalyst"
+    assert main([str(log), "--out", str(out), "--engine", "catalyst"]) == 0
     events = spark.read.parquet(str(out / "events"))
     assert events.count() == 1
     row = events.collect()[0]

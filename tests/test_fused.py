@@ -1,7 +1,9 @@
-"""Differential gate for the fused parse+fold engine (``sessionize_raw``):
-events, faults, and state must match the unfused Arrow engine
-(``sessionize(parse_lines_arrow(raw), raw_lines=raw)``) row-for-row on
-every golden fixture and on a synthetic interleaved log."""
+"""Differential gate for the fused parse+fold plan (``sessionize_raw``, the
+plan of ``sessionize(parse_lines_arrow(raw), raw_lines=raw)``): events,
+faults, and state must match the two-stage Arrow parse + partitioned fold
+row-for-row on every golden fixture and on a synthetic interleaved log.
+A parsed DataFrame derived from ``parse_lines_arrow`` (here ``select("*")``)
+does not fuse, so it runs the two-stage plan."""
 
 import pytest
 
@@ -32,7 +34,7 @@ def _rows(df, order_cols):
 def _run_both(spark, text):
     raw1 = lines_df(spark, text.splitlines())
     un = sessionize(
-        parse_lines_arrow(raw1), raw_lines=raw1, keep_order_columns=True
+        parse_lines_arrow(raw1).select("*"), raw_lines=raw1, keep_order_columns=True
     )
     raw2 = lines_df(spark, text.splitlines())
     fu = sessionize_raw(raw2, keep_order_columns=True)
@@ -70,8 +72,8 @@ def test_fused_garbage_only_input(spark):
 
 
 def test_fused_oversized_dim_falls_back(spark):
-    """max_broadcast_dovecot=0 forces the delegation to the unfused
-    engine's interval equi-join fallback — results must be identical."""
+    """max_broadcast_dovecot=0 forces the scale J1 (exploded intervals
+    joined to the sieve dim) — results must be identical."""
     (ev1, fa1, st1), _ = _run_both(spark, FIXTURES["dovecot"])
     ev2, fa2, st2 = sessionize_raw(
         lines_df(spark, FIXTURES["dovecot"].splitlines()),

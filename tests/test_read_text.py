@@ -1,5 +1,6 @@
-"""read_text determinism: the global seq must follow (file name, in-file
-position) order regardless of Spark's size-descending split packing."""
+"""read_text determinism: seq must be an order key following (file name,
+in-file position) order regardless of Spark's size-descending split
+packing.  It is strictly increasing in that order but not dense."""
 
 from pyspark.sql import functions as F
 
@@ -17,7 +18,8 @@ def test_multifile_seq_order(spark, tmp_path):
     assert values[:5] == [f"a{i}" for i in range(5)]
     assert values[5:505] == [f"b{i}" for i in range(500)]
     assert values[505:] == ["c0"]
-    assert [r["seq"] for r in rows] == list(range(506))
+    seqs = [r["seq"] for r in rows]
+    assert all(a < b for a, b in zip(seqs, seqs[1:]))  # an order key, no ties
 
 
 def test_read_text_empty_dir(spark, tmp_path):
