@@ -5,12 +5,18 @@ Spark-first.
 
 Pipeline (batch):
 
-    raw text lines ──parse_lines()──► parsed-line DataFrame (typed, tagged)
-        ──sessionize()──► (events DataFrame, faults DataFrame, state DataFrame)
+    raw = read_text(spark, path)
+    sessionize(parse_lines_arrow(raw), raw_lines=raw)
+        ──► (events DataFrame, faults DataFrame, state DataFrame)
         ──analytics / sinks──► SQL over the 22-column ``events`` schema
 
-plus a streaming variant (Structured Streaming + applyInPandasWithState)
-and a 100-TB-scale extension layer (dedup / similarity / text analysis /
+The two calls fuse into one plan: one shuffle of the raw lines, then one
+Python stage that parses and folds them.  ``parse_lines`` is the Catalyst
+parse: the streaming pre-fault pass runs it, and the tests hold the Arrow
+parse to it as an independent second implementation.
+
+There is also a streaming variant (Structured Streaming +
+applyInPandasWithState) and a 100-TB-scale extension layer (dedup / similarity / text analysis /
 multimodal) under ``ext/``.
 """
 

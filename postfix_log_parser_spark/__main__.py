@@ -53,15 +53,6 @@ def build_arg_parser() -> argparse.ArgumentParser:
         help="streaming: process available input (availableNow) and exit",
     )
     p.add_argument("--master", default=None, help="Spark master override")
-    p.add_argument(
-        "--engine",
-        choices=("catalyst",),
-        default=None,
-        help="batch engine.  Default: parse_lines_arrow + sessionize, fused "
-        "into one Python stage that parses and folds the raw lines after "
-        "one shuffle.  catalyst = pure-expression parse+fold (no Python on "
-        "the hot path; several times slower)",
-    )
     return p
 
 
@@ -115,10 +106,7 @@ def main(argv: list[str] | None = None) -> int:
             spark.streams.awaitAnyTermination()
         return 0
 
-    from postfix_log_parser_spark.operators.parse import (
-        parse_lines,
-        parse_lines_arrow,
-    )
+    from postfix_log_parser_spark.operators.parse import parse_lines_arrow
     from postfix_log_parser_spark.operators.sessionize import sessionize
     from postfix_log_parser_spark.sinks import write_events
     from postfix_log_parser_spark.sources.text import lines_df, read_text
@@ -128,10 +116,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         lines = read_text(spark, args.inputs)
 
-    if args.engine == "catalyst":
-        events, faults, state = sessionize(parse_lines(lines), fold="catalyst")
-    else:
-        events, faults, state = sessionize(parse_lines_arrow(lines), raw_lines=lines)
+    events, faults, state = sessionize(parse_lines_arrow(lines), raw_lines=lines)
 
     if args.out:
         write_events(events, f"{args.out}/events", mode="overwrite")

@@ -1132,7 +1132,8 @@ def q74_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "chunk seen in >= 2 distinct docs" as ONE min/max window over the
     # ck exchange (r13, guide §2.4 — same rewrite as
     # spans.duplicated_spans): the old groupBy(ck) + broadcast join-back
-    # re-ran the chunk-hash scan for the probe side
+    # re-ran the chunk-hash scan for the probe side.  Not skew-safe: every
+    # row of a hot ck (a boilerplate footer) lands in one task's full sort
     wck = Window.partitionBy("ck")
     marked = chunks.withColumn(
         "dup",

@@ -78,7 +78,9 @@ def duplicated_spans(docs: DataFrame, k: int = SPAN_K) -> DataFrame:
     # dup test as ONE window over the fingerprint exchange (r13, guide
     # §2.4): "h appears in >= 2 distinct docs" is exactly
     # min(doc_id) != max(doc_id) over (partition by h) — O(1) window
-    # state, skew-safe, and the gram stream is scanned+shuffled ONCE
+    # state, but NOT skew-safe: every row of a hot h lands in one task,
+    # which sorts its partition in full (a boilerplate gram shared by
+    # many docs is such a key).  The gram stream is scanned+shuffled ONCE
     # (the old groupBy(h)+join-back re-ran the md5 scan and shuffled
     # the grams a second time; same-process A/B 2.13 -> 1.08 s)
     wh = Window.partitionBy("h")

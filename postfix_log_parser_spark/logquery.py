@@ -2,11 +2,11 @@
 
 The reference's behavioral contract is its 7 golden fixtures
 (``lognormalizer/parse_test.py:26-277``).  These queries run the fixtures
-through the real engine (``parse_lines`` → ``sessionize``) and project
-deterministic scalar columns; the DuckDB oracles are literal VALUES rows
-derived from the reference's asserted outputs — so the driver's oracle
-harness verifies the full parser surface (F1-F4, P1-P12, A1-A2, J1, S4),
-not just the analytics layer.
+through the real engine (``parse_lines_arrow`` → ``sessionize``, the fused
+plan the CLI runs) and project deterministic scalar columns; the DuckDB
+oracles are literal VALUES rows derived from the reference's asserted
+outputs — so the contract's oracle harness verifies the full parser
+surface (F1-F4, P1-P12, A1-A2, J1, S4), not just the analytics layer.
 
 Fixture log lines are quoted from the reference tests (MIT-licensed),
 same as ``tests/test_golden.py``.
@@ -177,10 +177,10 @@ _register_result_stages()
 
 
 def _run(spark: SparkSession, text: str):
-    """Parse→sessionize one fixture text through the Arrow engine (the
-    throughput path; the Catalyst engine is driver-verified via q43's
-    streaming pipeline and the golden pytest suite, and the two are
-    differentially tested).
+    """Parse→sessionize one fixture text through the fused plan the CLI
+    runs (the Catalyst ``parse_lines`` is contract-checked via q161 and
+    differentially tested against the Arrow parse in
+    ``tests/test_arrow_parse.py``).
 
     Staged per (session, fixture): five contract queries project the
     SAME ALL_EVENTS_FIXTURE pipeline — the fixture fold runs once and
@@ -559,13 +559,12 @@ def q166_pystream_relay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q45_fused_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same fixtures and projection as q40, through the FUSED plan
-    (``sessionize_raw``: one raw-line shuffle, parse+fold in a single
-    Python stage, J1 after the fold) — the driver-verified correctness
-    gate for the throughput path, against the identical VALUES oracle."""
-    from postfix_log_parser_spark.operators.sessionize import sessionize_raw
-
+    (``sessionize(parse_lines_arrow(raw), raw_lines=raw)``: one raw-line
+    shuffle, parse+fold in a single Python stage, J1 after the fold),
+    unstaged — the contract-checked correctness gate for the throughput
+    path, against the identical VALUES oracle."""
     raw = lines_df(spark, ALL_EVENTS_FIXTURE.splitlines())
-    events, _faults, _state = sessionize_raw(raw)
+    events, _faults, _state = sessionize(parse_lines_arrow(raw), raw_lines=raw)
     return _events_projection(events)
 
 
@@ -947,7 +946,7 @@ def _stream_shuffle_partitions(spark: SparkSession, source_path) -> str:
         return "8"
     per = 64 << 20
     n = max(1, (_path_bytes(source_path) + per - 1) // per)
-    cap = max(64, 4 * spark.sparkContext.defaultParallelism)
+    cap = max(1, 4 * spark.sparkContext.defaultParallelism)
     return str(min(n, cap))
 
 

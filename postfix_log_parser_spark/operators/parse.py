@@ -454,18 +454,12 @@ def dovecot_dim_from_raw(lines: DataFrame, line_col: str = "value") -> DataFrame
     )
 
 
-def parse_lines(
-    lines: DataFrame,
-    line_col: str = "value",
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
+def parse_lines(lines: DataFrame, line_col: str = "value") -> DataFrame:
     """Parse raw log lines into the ``schema.PARSED_SCHEMA`` DataFrame.
 
     Input: a DataFrame with a string column ``line_col`` (and optionally a
     precomputed ``seq`` long column).  Pure narrow transformation — no
-    shuffle; scales linearly with input partitions.  ``passthrough`` names
-    extra input columns to carry through unchanged (used by the streaming
-    path for its locally-resolved dovecot key).
+    shuffle; scales linearly with input partitions.
     """
     df = with_seq(lines, line_col)
     # Python str.strip()/str.split() semantics: trim/split on UNICODE
@@ -476,9 +470,7 @@ def parse_lines(
     # identically here, in the Arrow twin (_parse_row) and the reference.
     raw = F.regexp_replace(F.col(line_col), f"^{_WS}+|{_WS}+$", "")
 
-    df = df.select(
-        "seq", *passthrough, raw.alias("line"), F.split(raw, f"{_WS}+").alias("tokens")
-    )
+    df = df.select("seq", raw.alias("line"), F.split(raw, f"{_WS}+").alias("tokens"))
     tokens = F.col("tokens")
     n = F.size(tokens)
 
@@ -569,7 +561,6 @@ def parse_lines(
 
     parsed = df.select(
         "seq",
-        *passthrough,
         "line",
         kind.alias("kind"),
         F.when(n >= 5, ts).alias("timestamp"),
@@ -605,7 +596,6 @@ def parse_lines(
     # projection runs once per surviving row.
     common = [
         "seq",
-        *passthrough,
         "line",
         "timestamp",
         "queue_id",
@@ -644,7 +634,6 @@ def parse_lines(
     )
     order = [
         "seq",
-        *passthrough,
         "line",
         "kind",
         "timestamp",

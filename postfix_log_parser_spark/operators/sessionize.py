@@ -16,23 +16,20 @@ caller's action:
   Python stage parses and folds in place (``_fused_batches``): parse
   output never crosses a serialization boundary, and a batch ingest is
   one Spark action with one Python stage.
-* Any other ``parsed`` goes through one of three interchangeable fold
-  strategies, one semantics:
+* Any other ``parsed`` goes through one of two fold strategies, one
+  semantics, both running the same ``_QueueFolder`` state machine:
 
   * ``partitioned`` (default): ``repartition(queue_id)`` +
     ``sortWithinPartitions(queue_id, seq)`` + a linear ``mapInPandas``
-    scan running the ``_QueueFolder`` state machine over contiguous queue
-    runs.  One hash shuffle (the irreducible co-location cost of any
-    keyed fold), then ~1µs/row Python.  An order-sensitive multi-key
-    state machine is precisely the case where built-in operators can't
-    express the semantics efficiently (interpreted higher-order lambdas),
-    so this is the sanctioned mapInPandas escape hatch.
-  * ``catalyst``: the pure-expression fold (``_fold_native``) — zero
-    Python on the fold path; kept as a working alternative and
-    differential check.
+    scan over contiguous queue runs.  One hash shuffle (the irreducible
+    co-location cost of any keyed fold), then ~1µs/row Python.  An
+    order-sensitive multi-key state machine is precisely the case where
+    built-in operators can't express the semantics efficiently
+    (interpreted higher-order lambdas), so this is the sanctioned
+    mapInPandas escape hatch.
   * ``pandas``: per-group ``applyInPandas`` oracle — the most direct
     transcription of the reference's ``feed_line`` loop; the ground truth
-    the quirk tests hold every strategy to.
+    the quirk and fuzz tests hold the production fold to.
 
 * J1, the dovecot sieve correlation, runs once, after the fold, for every
   strategy.  A dovecot line updates a session iff the session's *current*
@@ -113,9 +110,9 @@ class _QueueFolder:
     """The per-queue state machine: an exact transcription of ``feed_line``
     (``parse.py:380-423``) + ``PostfixEvent.__init__`` required-key checks
     (``parse.py:143-150``), including Q4 (a failed ``removed`` leaves the
-    session open; its line stays in raw_log).  Shared by the partitioned
-    fold (default), the per-group pandas oracle, and nothing else — one
-    source of truth for the fold semantics."""
+    session open; its line stays in raw_log).  Shared by the fused and
+    partitioned folds and the per-group pandas oracle — one source of
+    truth for the fold semantics."""
 
     __slots__ = (
         "queue_id",
@@ -371,293 +368,6 @@ def _fold_fused(raw_lines: DataFrame, line_col: str) -> DataFrame:
     )
 
 
-_ENTRY_ARRAY_T = "array<struct<eseq:bigint,key:string,value:string>>"
-
-# accumulator for the per-queue linear fold: required-key presence flags
-# since the last successful boundary, successful-removed seqs, failed
-# removals (Q4) with the first missing key.
-_ACC_INIT = (
-    "named_struct("
-    "'f', false, 't', false, 'm', false, 's', false, 'd', false,"
-    "'bnd', cast(array() as array<bigint>),"
-    "'fails', cast(array() as array<struct<seq:bigint,missing:string>>))"
-)
-
-
-def _last_wins_fields(entries: Column) -> Column:
-    """Fold (eseq, key, value) entries — already in seq order — into a
-    last-wins map.  Duplicate keys are removed BEFORE map_from_entries
-    (keep-last, quirk Q1), so the result is independent of the session's
-    ``spark.sql.mapKeyDedupPolicy`` — a caller on the default EXCEPTION
-    policy would otherwise hit DUPLICATED_MAP_KEY at execution."""
-    from postfix_log_parser_spark.operators.parse import _dedup_last_wins
-
-    return F.map_from_entries(
-        F.transform(
-            _dedup_last_wins(entries, "key"),
-            lambda e: F.struct(e["key"], e["value"]),
-        )
-    )
-
-
-def _empty_str_array() -> Column:
-    return F.array().cast("array<string>")
-
-
-def _boundary_fold(xs: Column) -> Column:
-    """Linear fold over a queue's sorted lines, reproducing ``feed_line``'s
-    finalization semantics exactly (``lognormalizer/parse.py:341-355`` +
-    ``PostfixEvent`` required keys ``parse.py:143-150``):
-
-    a ``removed`` marker closes the session ONLY if every required field
-    has been set since the previous successful boundary; otherwise the
-    reference raises KeyError → fault and the session stays open (Q4).
-    Returns ``struct(bnd: array<seq of successful removed>, fails:
-    array<(seq, first-missing-key)>)``."""
-
-    def has_key(x: Column, k: str) -> Column:
-        return F.exists(x["entries"], lambda e: e["key"] == k)
-
-    def step(acc: Column, x: Column) -> Column:
-        is_removed = x["kind"] == F.lit("removed")
-        ok = acc["f"] & acc["t"] & acc["m"] & acc["s"] & acc["d"]
-        # first missing key in the reference's required-key order
-        missing = (
-            F.when(~acc["f"], F.lit("from"))
-            .when(~acc["t"], F.lit("to"))
-            .when(~acc["m"], F.lit("message-id"))
-            .when(~acc["s"], F.lit("status"))
-            .otherwise(F.lit("status_description"))
-        )
-        reset_flags = [
-            F.lit(False).alias(n) for n in ("f", "t", "m", "s", "d")
-        ]
-        closed = F.struct(
-            *reset_flags,
-            F.concat(acc["bnd"], F.array(x["seq"])).alias("bnd"),
-            acc["fails"].alias("fails"),
-        )
-        failed = F.struct(
-            acc["f"].alias("f"),
-            acc["t"].alias("t"),
-            acc["m"].alias("m"),
-            acc["s"].alias("s"),
-            acc["d"].alias("d"),
-            acc["bnd"].alias("bnd"),
-            F.concat(
-                acc["fails"],
-                F.array(F.struct(x["seq"].alias("seq"), missing.alias("missing"))),
-            ).alias("fails"),
-        )
-        folded_line = F.struct(
-            (acc["f"] | has_key(x, "from")).alias("f"),
-            (
-                acc["t"]
-                | (F.size(F.coalesce(x["to_list"], _empty_str_array())) > 0)
-            ).alias("t"),
-            (acc["m"] | has_key(x, "message-id")).alias("m"),
-            (acc["s"] | has_key(x, "status")).alias("s"),
-            (acc["d"] | has_key(x, "status_description")).alias("d"),
-            acc["bnd"].alias("bnd"),
-            acc["fails"].alias("fails"),
-        )
-        return (
-            F.when(is_removed & ok, closed)
-            .when(is_removed, failed)
-            .otherwise(folded_line)
-        )
-
-    return F.aggregate(xs, F.expr(_ACC_INIT), step)
-
-
-def _session_row(s: Column, k: Column, bnd: Column) -> Column:
-    """FOLD-row struct for one session (array expression; ``s`` is the
-    session's sorted line structs, ``k`` its index, ``bnd`` the successful
-    boundary seqs — session k is closed iff k < size(bnd))."""
-    removed_seq = F.get(bnd, k)  # null for the trailing open session
-    entries_flat = F.flatten(F.transform(s, lambda x: x["entries"]))
-    fields = _last_wins_fields(entries_flat)
-    to_list = F.flatten(
-        F.transform(s, lambda x: F.coalesce(x["to_list"], _empty_str_array()))
-    )
-    assigns = F.filter(entries_flat, lambda e: e["key"] == "message-id")
-    n_assign = F.size(assigns)
-    intervals = F.when(
-        n_assign > 0,
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(n_assign - F.lit(1), F.lit(0))),
-            lambda i: F.struct(
-                F.get(assigns, i)["value"].alias("msgid"),
-                F.get(assigns, i)["eseq"].alias("lo"),
-                F.coalesce(F.get(assigns, i + F.lit(1))["eseq"], removed_seq).alias(
-                    "hi"
-                ),
-            ),
-        ),
-    ).otherwise(
-        F.array().cast("array<struct<msgid:string,lo:bigint,hi:bigint>>")
-    )
-    kv_dovecot_seq = F.try_element_at(
-        F.filter(entries_flat, lambda e: e["key"] == "dovecot_fileinto_action"),
-        F.lit(-1),
-    )["eseq"]
-    return F.struct(
-        F.when(k < F.size(bnd), F.lit("event"))
-        .otherwise(F.lit("state"))
-        .alias("record_type"),
-        F.get(s, 0)["seq"].alias("start_seq"),
-        F.get(s, 0)["timestamp"].alias("timestamp"),
-        fields.alias("fields"),
-        to_list.alias("to_list"),
-        F.transform(s, lambda x: x["line"]).alias("raw_log"),
-        removed_seq.alias("removed_seq"),
-        intervals.alias("msgid_intervals"),
-        kv_dovecot_seq.alias("kv_dovecot_seq"),
-        F.lit(None).cast("string").alias("fault_reason"),
-        F.lit(None).cast("string").alias("fault_line"),
-        F.lit(None).cast("long").alias("fault_seq"),
-    )
-
-
-def _fault_row(reason: Column, line: Column, seq: Column) -> Column:
-    return F.struct(
-        F.lit("fault").alias("record_type"),
-        F.lit(None).cast("long").alias("start_seq"),
-        F.lit(None).cast("timestamp").alias("timestamp"),
-        F.lit(None).cast("map<string,string>").alias("fields"),
-        F.lit(None).cast("array<string>").alias("to_list"),
-        F.lit(None).cast("array<string>").alias("raw_log"),
-        F.lit(None).cast("long").alias("removed_seq"),
-        F.lit(None)
-        .cast("array<struct<msgid:string,lo:bigint,hi:bigint>>")
-        .alias("msgid_intervals"),
-        F.lit(None).cast("long").alias("kv_dovecot_seq"),
-        reason.alias("fault_reason"),
-        line.alias("fault_line"),
-        seq.alias("fault_seq"),
-    )
-
-
-def _fold_native(feed: DataFrame) -> DataFrame:
-    """Catalyst-only fold: parsed lines → per-session FOLD rows.
-
-    ONE hash shuffle (``groupBy(queue_id)``) and ONE explode; everything
-    else is array expressions over the per-queue sorted line list:
-
-    1. ``_boundary_fold`` — linear accumulator fold finds the seqs of
-       *successful* ``removed`` markers (reference Q4: a removed whose
-       session misses a required key faults and leaves the session open)
-       and the failed removals with their KeyError key.
-    2. Split lines into sessions on those boundaries (a removed closes
-       the session it belongs to), build one FOLD-row struct per session,
-       plus fault rows for failed removals and admitted line-faults
-       (subject/MIME IndexError parity, Q8/Q12).
-    3. ``explode`` the combined row array.
-
-    Per-queue_id data is bounded (a mail session is 5-20 lines) and the
-    key is uniform uppercase hex — no skew handling needed.  This is the
-    exact semantic twin of ``_fold_group`` (the pandas oracle, kept for
-    differential tests via ``use_native=False``).
-    """
-    desc_entry = F.array(
-        F.struct(
-            F.col("seq").alias("eseq"),
-            F.lit("status_description").alias("key"),
-            F.col("status_description").alias("value"),
-        )
-    )
-    subject_entry = F.array(
-        F.struct(
-            F.col("seq").alias("eseq"),
-            F.lit("subject").alias("key"),
-            F.col("subject").alias("value"),
-        )
-    )
-    kv_entries = F.transform(
-        F.map_entries(F.col("fields")),
-        lambda e: F.struct(
-            F.col("seq").alias("eseq"), e["key"].alias("key"), e["value"].alias("value")
-        ),
-    )
-    empty = F.array().cast(_ENTRY_ARRAY_T)
-    line_entries = F.concat(
-        F.when(F.col("fields").isNotNull(), kv_entries).otherwise(empty),
-        F.when(F.col("status_description").isNotNull(), desc_entry).otherwise(empty),
-        F.when(
-            (F.col("kind") == "subject") & F.col("fault_reason").isNull(),
-            subject_entry,
-        ).otherwise(empty),
-    )
-
-    lines = feed.select(
-        "queue_id",
-        F.struct(
-            F.col("seq"),
-            F.col("line"),
-            F.col("timestamp"),
-            F.col("kind"),
-            line_entries.alias("entries"),
-            F.col("to_list"),
-            F.col("fault_reason"),
-        ).alias("x"),
-    )
-    g = lines.groupBy("queue_id").agg(
-        F.sort_array(F.collect_list("x")).alias("xs")
-    )
-
-    xs = F.col("xs")
-    fold = _boundary_fold(xs)
-    g = g.withColumn("bnd", fold["bnd"]).withColumn("fails", fold["fails"])
-    bnd = F.col("bnd")
-
-    # session index of a line = number of successful boundaries before it;
-    # a successful removed closes its own session, a failed one does not
-    # split (Q4).
-    sessions = F.transform(
-        F.sequence(F.lit(0), F.size(bnd)),
-        lambda k: F.filter(
-            xs, lambda x: F.size(F.filter(bnd, lambda b: b < x["seq"])) == k
-        ),
-    )
-    session_rows = F.filter(
-        F.transform(
-            sessions,
-            lambda s, k: F.when(F.size(s) > 0, _session_row(s, k, bnd)),
-        ),
-        lambda r: r.isNotNull(),
-    )
-    fail_rows = F.transform(
-        F.col("fails"),
-        lambda f: _fault_row(
-            F.concat(F.lit("KeyError: '"), f["missing"], F.lit("'")),
-            F.get(F.filter(xs, lambda x: x["seq"] == f["seq"]), 0)["line"],
-            f["seq"],
-        ),
-    )
-    line_fault_rows = F.transform(
-        F.filter(xs, lambda x: x["fault_reason"].isNotNull()),
-        lambda x: _fault_row(x["fault_reason"], x["line"], x["seq"]),
-    )
-    all_rows = F.concat(session_rows, fail_rows, line_fault_rows)
-
-    r = F.col("r")
-    return g.select("queue_id", F.explode(all_rows).alias("r")).select(
-        r["record_type"].alias("record_type"),
-        "queue_id",
-        r["start_seq"].alias("start_seq"),
-        r["timestamp"].alias("timestamp"),
-        r["fields"].alias("fields"),
-        r["to_list"].alias("to_list"),
-        r["raw_log"].alias("raw_log"),
-        r["removed_seq"].alias("removed_seq"),
-        r["msgid_intervals"].alias("msgid_intervals"),
-        r["kv_dovecot_seq"].alias("kv_dovecot_seq"),
-        r["fault_reason"].alias("fault_reason"),
-        r["fault_line"].alias("fault_line"),
-        r["fault_seq"].alias("fault_seq"),
-    )
-
-
 def _project_events(folded: DataFrame) -> DataFrame:
     """P4/P5/P6/P11/P12 — native event projection from folded session state
     (``PostfixEvent.__init__``, ``parse.py:136-168``)."""
@@ -807,7 +517,6 @@ def _resolve_dovecot(
 def sessionize(
     parsed: DataFrame,
     keep_order_columns: bool = False,
-    use_native: bool | None = None,
     fold: str = "partitioned",
     raw_lines: DataFrame | None = None,
     max_broadcast_dovecot: int = 100_000,
@@ -830,7 +539,9 @@ def sessionize(
 
     ``parsed`` fuses with the fold only when it is the unmodified output of
     ``parse_lines_arrow(raw_lines)`` and the fold is ``partitioned``; any
-    other ``parsed`` keeps its own plan.  With ``raw_lines`` the sieve dim
+    other ``parsed`` keeps its own plan and is folded by ``fold``:
+    ``partitioned`` (default) or ``pandas``, the per-group oracle; any
+    other value raises ``ValueError``.  With ``raw_lines`` the sieve dim
     comes from a narrow Catalyst scan of the raw text
     (``dovecot_dim_from_raw``), else from ``parsed``.
 
@@ -850,8 +561,8 @@ def sessionize(
     from postfix_log_parser_spark.operators.parse import dovecot_dim_from_raw
     from postfix_log_parser_spark.sources.text import planned_line_bound
 
-    if use_native is not None:  # back-compat switch used by the test oracle
-        fold = "catalyst" if use_native else "pandas"
+    if fold not in ("partitioned", "pandas"):
+        raise ValueError(f"unknown fold strategy: {fold!r}")
     source = getattr(parsed, "_arrow_parse_of", None)
     line_col = source[1] if source is not None else "value"
     pre_faults = None
@@ -876,12 +587,8 @@ def sessionize(
         )
         if fold == "partitioned":
             folded = _fold_partitioned(feed)
-        elif fold == "catalyst":
-            folded = _fold_native(feed)
-        elif fold == "pandas":
+        else:
             folded = feed.groupBy("queue_id").applyInPandas(_fold_group, FOLD_SCHEMA)
-        else:  # pragma: no cover - guard
-            raise ValueError(f"unknown fold strategy: {fold}")
 
     if materialize_fold:
         # events, faults and state all derive from ``folded``: one eager
@@ -935,21 +642,3 @@ def sessionize(
         F.col("_dovecot_final").alias("dovecot_fileinto_action"),
     )
     return events, faults, state
-
-
-def sessionize_raw(
-    raw_lines: DataFrame,
-    line_col: str = "value",
-    keep_order_columns: bool = False,
-    max_broadcast_dovecot: int = 100_000,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Parse and sessionize raw lines: the fused plan of
-    ``sessionize(parse_lines_arrow(raw_lines), raw_lines=raw_lines)``."""
-    from postfix_log_parser_spark.operators.parse import parse_lines_arrow
-
-    return sessionize(
-        parse_lines_arrow(raw_lines, line_col),
-        keep_order_columns=keep_order_columns,
-        raw_lines=raw_lines,
-        max_broadcast_dovecot=max_broadcast_dovecot,
-    )

@@ -1,4 +1,6 @@
-"""Text log sources (S1) — batch and streaming.
+"""Batch text log sources (S1).  The streaming twin reads
+``spark.readStream.text`` and attaches its order key in
+``streaming.sessionize_stream.prepare_stream``.
 
 The reference slurps all of stdin with ``readlines()``
 (``lognormalizer/parse.py:515-516``); here the input is a partitioned
@@ -56,15 +58,10 @@ _ORD_LIMIT = 1 << (63 - _ROW_BITS)
 def read_text(
     spark: SparkSession,
     path: str | list[str],
-    ordered: bool = True,
     max_literal_splits: int = 4096,
 ) -> DataFrame:
     """Batch text source: one ``value`` string column plus ``seq``, an
     order key following (file name, in-file position) order.
-
-    ``ordered=False`` uses the raw ``monotonically_increasing_id`` — only
-    safe when downstream ignores cross-line ordering (e.g. pure
-    filtering/counting jobs).
 
     Up to ``max_literal_splits`` splits the ordinals ride a literal map
     (the default 4096 keeps the ``CreateMap`` tree well under the 64KB
@@ -72,8 +69,6 @@ def read_text(
     split list.  Both give the same ``seq``.
     """
     df = spark.read.text(path)
-    if not ordered:
-        return df.withColumn("seq", F.monotonically_increasing_id())
     splits = sorted(_planned_files(df))
     if len(splits) >= _ORD_LIMIT:
         raise ValueError(
@@ -206,8 +201,3 @@ def lines_df(spark: SparkSession, lines: list[str]) -> DataFrame:
         return spark.createDataFrame(list(enumerate(lines)), "seq long, value string")
     seqs = pa.array(range(len(lines)), pa.int64())
     return spark.createDataFrame(pa.table({"seq": seqs, "value": values}))
-
-
-def read_text_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming text source (file drop directory)."""
-    return spark.readStream.text(path)

@@ -1,8 +1,9 @@
 """Structured Streaming twin of the batch pipeline (SURVEY.md §2 A1-A3).
 
-``read_text_stream`` → ``prepare_stream`` → ``parse_lines(passthrough=…)``
-→ ``sessionize_stream`` is the streaming mirror of
-``read_text`` → ``parse_lines`` → ``sessionize``.
+``spark.readStream.text`` → ``sessionize_stream`` (``prepare_stream``
+attaches the order key, the state worker parses and folds each line) is
+the streaming mirror of the batch fused plan ``read_text`` →
+``sessionize(parse_lines_arrow(raw), raw_lines=raw)``.
 """
 
 from postfix_log_parser_spark.streaming.sessionize_stream import (

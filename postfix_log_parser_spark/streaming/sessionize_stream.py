@@ -57,12 +57,12 @@ bounded session (5-20 lines) — no skew, no unbounded state.
 FUSED since r8: the fold branch ships the RAW trimmed line (keyed by
 the cheap token-3 queue-id candidate) and the full per-line parse runs
 inside the state worker via ``_parse_row`` — the streaming twin of the
-batch ``sessionize_raw`` engine.  The Catalyst parse tree never enters
-the streaming plan, which cut q43's per-query fixed cost ~30%
-(queryPlanning 1.2 s → 0.6 s, addBatch 2.9 s → 1.6 s measured warm);
-the three branches are all narrow regex/token projections, and the
-fold re-checks admission so the over-admitting cheap filter never
-changes WHAT folds.
+batch fused plan, ``sessionize(parse_lines_arrow(raw), raw_lines=raw)``.
+The Catalyst parse tree never enters the streaming plan, which cut
+q43's per-query fixed cost ~30% (queryPlanning 1.2 s → 0.6 s, addBatch
+2.9 s → 1.6 s measured warm); the three branches are all narrow
+regex/token projections, and the fold re-checks admission so the
+over-admitting cheap filter never changes WHAT folds.
 """
 
 from __future__ import annotations
@@ -521,9 +521,9 @@ def sessionize_stream(
     then one hash shuffle on ``queue_id`` into the fold's state store.
     Everything upstream is a narrow regex/token projection — the full
     per-line parse is FUSED into the fold's Python state worker
-    (``_parse_row``, the streaming twin of the batch ``sessionize_raw``
-    engine), so the streaming plan never instantiates the Catalyst parse
-    expression tree; everything downstream (projection) is stateless.
+    (``_parse_row``, the streaming twin of the batch fused plan), so the
+    streaming plan never instantiates the Catalyst parse expression tree;
+    everything downstream (projection) is stateless.
     """
     from postfix_log_parser_spark.operators.parse import _QUEUE_ID_RE, _WS
 
@@ -551,10 +551,9 @@ def sessionize_stream(
         "evt", F.coalesce(head_ts, F.col("_dove_ts"))
     ).withWatermark("evt", watermark_delay)
 
-    # FUSED feed (the streaming twin of the batch ``sessionize_raw``
-    # engine): the fold branch ships the RAW trimmed line keyed by the
-    # token-3 queue-id candidate — no Catalyst parse tree in the
-    # streaming plan at all.  The full per-line parse (``_parse_row``,
+    # FUSED feed (the streaming twin of the batch fused plan): the fold
+    # branch ships the RAW trimmed line keyed by the token-3 queue-id
+    # candidate — no Catalyst parse tree in the streaming plan at all.  The full per-line parse (``_parse_row``,
     # the differentially-tested Python twin of ``parse_lines``) runs
     # inside the state worker, where the line is already in Python.
     # This cuts the dominant q43 fixed costs measured on the unfused

@@ -4,7 +4,7 @@ import re
 
 import pytest
 
-from postfix_log_parser_spark import get_spark, parse_lines, sessionize
+from postfix_log_parser_spark import get_spark, parse_lines_arrow, sessionize
 from postfix_log_parser_spark.sources.text import lines_df
 
 
@@ -124,13 +124,15 @@ def spark():
 class Harness:
     """Batch equivalent of the reference's ExtPostfixLogParser test harness
     (``lognormalizer/parse_test.py:10-23``): feed lines, inspect events,
-    faults and residual state."""
+    faults and residual state.  Runs the shipped batch path, the fused
+    plan the CLI takes."""
 
     def __init__(self, spark, lines):
         self.spark = spark
         df = lines_df(spark, list(lines))
-        parsed = parse_lines(df)
-        events_df, faults_df, state_df = sessionize(parsed, keep_order_columns=True)
+        events_df, faults_df, state_df = sessionize(
+            parse_lines_arrow(df), raw_lines=df, keep_order_columns=True
+        )
         # emission order == order of the removed line in the input
         self.events = [
             r.asDict(recursive=True)

@@ -93,16 +93,3 @@ def test_cli_batch_out(spark, tmp_path):
     state = spark.read.parquet(str(out / "state"))
     assert [r["queue_id"] for r in state.collect()] == ["BBBBBBBBBBB"]
 
-
-def test_cli_batch_out_catalyst_engine(spark, tmp_path):
-    log = tmp_path / "mail.log"
-    log.write_text(LOG)
-    out = tmp_path / "out_catalyst"
-    assert main([str(log), "--out", str(out), "--engine", "catalyst"]) == 0
-    events = spark.read.parquet(str(out / "events"))
-    assert events.count() == 1
-    row = events.collect()[0]
-    assert row["queue_id"] == "85C6C10208A"
-    assert row["status_code"] == 250
-    state = spark.read.parquet(str(out / "state"))
-    assert [r["queue_id"] for r in state.collect()] == ["BBBBBBBBBBB"]

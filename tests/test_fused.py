@@ -1,6 +1,6 @@
-"""Differential gate for the fused parse+fold plan (``sessionize_raw``, the
-plan of ``sessionize(parse_lines_arrow(raw), raw_lines=raw)``): events,
-faults, and state must match the two-stage Arrow parse + partitioned fold
+"""Differential gate for the fused parse+fold plan of
+``sessionize(parse_lines_arrow(raw), raw_lines=raw)``: events, faults,
+and state must match the two-stage Arrow parse + partitioned fold
 row-for-row on every golden fixture and on a synthetic interleaved log.
 A parsed DataFrame derived from ``parse_lines_arrow`` (here ``select("*")``)
 does not fuse, so it runs the two-stage plan."""
@@ -9,7 +9,7 @@ import pytest
 
 import postfix_log_parser_spark.logquery as lq
 from postfix_log_parser_spark.operators.parse import parse_lines_arrow
-from postfix_log_parser_spark.operators.sessionize import sessionize, sessionize_raw
+from postfix_log_parser_spark.operators.sessionize import sessionize
 from postfix_log_parser_spark.sources.text import lines_df
 
 FIXTURES = {
@@ -22,6 +22,10 @@ FIXTURES = {
     "all_events": lq.ALL_EVENTS_FIXTURE,
     "stream_events": lq.STREAM_EVENTS_FIXTURE,
 }
+
+
+def _fused(raw, **kw):
+    return sessionize(parse_lines_arrow(raw), raw_lines=raw, **kw)
 
 
 def _rows(df, order_cols):
@@ -37,7 +41,7 @@ def _run_both(spark, text):
         parse_lines_arrow(raw1).select("*"), raw_lines=raw1, keep_order_columns=True
     )
     raw2 = lines_df(spark, text.splitlines())
-    fu = sessionize_raw(raw2, keep_order_columns=True)
+    fu = _fused(raw2, keep_order_columns=True)
     return un, fu
 
 
@@ -60,12 +64,12 @@ def test_fused_matches_unfused_synth(spark):
 
 
 def test_fused_empty_input(spark):
-    ev, fa, st = sessionize_raw(lines_df(spark, []))
+    ev, fa, st = _fused(lines_df(spark, []))
     assert ev.count() == 0 and fa.count() == 0 and st.count() == 0
 
 
 def test_fused_garbage_only_input(spark):
-    ev, fa, st = sessionize_raw(
+    ev, fa, st = _fused(
         lines_df(spark, ["", "   ", "one two", "not a log line at all"])
     )
     assert ev.count() == 0 and fa.count() == 0 and st.count() == 0
@@ -75,7 +79,7 @@ def test_fused_oversized_dim_falls_back(spark):
     """max_broadcast_dovecot=0 forces the scale J1 (exploded intervals
     joined to the sieve dim) — results must be identical."""
     (ev1, fa1, st1), _ = _run_both(spark, FIXTURES["dovecot"])
-    ev2, fa2, st2 = sessionize_raw(
+    ev2, fa2, st2 = _fused(
         lines_df(spark, FIXTURES["dovecot"].splitlines()),
         keep_order_columns=True,
         max_broadcast_dovecot=0,

@@ -261,15 +261,16 @@ def test_fuzz_fused_engine_agrees(spark):
     the same adversarial line soup — including mis-keyed shapes (lowercase
     / short / 12-hex queue tokens) that exercise the Catalyst co-location
     key's agreement with the Python admission logic."""
-    from postfix_log_parser_spark.operators.sessionize import sessionize_raw
-
     lines = gen_lines(3000)
     raw1 = lines_df(spark, lines)
     # a derived parsed DataFrame does not fuse: two-stage parse + fold
     ev1, fa1, st1 = sessionize(
         parse_lines_arrow(raw1).select("*"), raw_lines=raw1, keep_order_columns=True
     )
-    ev2, fa2, st2 = sessionize_raw(lines_df(spark, lines), keep_order_columns=True)
+    raw2 = lines_df(spark, lines)
+    ev2, fa2, st2 = sessionize(
+        parse_lines_arrow(raw2), raw_lines=raw2, keep_order_columns=True
+    )
 
     def norm(ev, fa, st):
         return (

@@ -113,14 +113,16 @@ def test_fused_engine_single_shuffle(spark):
     hash exchange — the raw-line co-location shuffle.  Parse output never
     shuffles (that is the engine's 100 TB claim: shuffle bytes are the
     raw line + key, not the parsed maps/arrays)."""
-    from postfix_log_parser_spark.operators.sessionize import sessionize_raw
+    from postfix_log_parser_spark.operators.parse import parse_lines_arrow
+    from postfix_log_parser_spark.operators.sessionize import sessionize
     from postfix_log_parser_spark.sources.text import lines_df
 
     lines = [
         "2024-04-09T20:22:42.548478+03:00 h p AAAAAAAAAAA: from=<a@b.c>",
         "2024-04-09T20:22:43.000000+03:00 h p AAAAAAAAAAA: removed",
     ]
-    events, faults, state = sessionize_raw(lines_df(spark, lines))
+    raw = lines_df(spark, lines)
+    events, faults, state = sessionize(parse_lines_arrow(raw), raw_lines=raw)
     plan = _plan(events)
     assert plan.count("Exchange hashpartitioning") == 1
 

@@ -1,9 +1,10 @@
-"""Quirk unit tests Q1-Q12 (SURVEY.md §2.10) + native-vs-pandas fold
+"""Quirk unit tests Q1-Q12 (SURVEY.md §2.10) + partitioned-vs-pandas fold
 equivalence.
 
-Every test runs through BOTH fold paths — the Catalyst-native fast path
-and the pandas oracle (``use_native=False``, the direct transcription of
-the reference's ``feed_line``) — and asserts they agree, then asserts the
+Every test runs through BOTH fold strategies — the partitioned
+``mapInPandas`` fold and the per-group pandas oracle (``fold="pandas"``,
+the direct transcription of the reference's ``feed_line``) — over the
+Catalyst ``parse_lines`` output and asserts they agree, then asserts the
 reference-verified expected values.
 """
 
@@ -21,25 +22,14 @@ def _line(i, j, rest):
 
 
 class Both:
-    """Run a fixture through ALL fold strategies (partitioned default,
-    catalyst-native, per-group pandas oracle) and check equivalence.
-
-    Default (driver) lane: partitioned vs pandas — the reference
-    transcription remains the per-quirk oracle.  The catalyst arm's
-    interpreted expression fold dominates these tests' runtime (~2/3 of
-    26 s per quirk) and its 3-way agreement is separately pinned by
-    ``test_fuzz.py::test_fuzz_fold_strategies_agree`` (default lane) and
-    by the full lane, where SPARK_GRAFT_FULL_TESTS=1 restores it here."""
+    """Run a fixture through both fold strategies (partitioned default,
+    per-group pandas oracle) and check equivalence: the reference
+    transcription is the per-quirk oracle."""
 
     def __init__(self, spark, lines):
-        import os as _os
-
-        strategies = ("partitioned", "catalyst", "pandas") if _os.environ.get(
-            "SPARK_GRAFT_FULL_TESTS"
-        ) else ("partitioned", "pandas")
         lines = [ln for ln in lines if ln.strip()]
         results = {}
-        for strategy in strategies:
+        for strategy in ("partitioned", "pandas"):
             parsed = parse_lines(lines_df(spark, lines))
             ev, fa, st = sessionize(parsed, keep_order_columns=True, fold=strategy)
             results[strategy] = (
@@ -57,11 +47,10 @@ class Both:
                 e.pop("_start_seq", None)
                 e.pop("_removed_seq", None)
         ne, nf, ns = results["partitioned"]
-        for other in [st for st in strategies if st != "partitioned"]:
-            oe, of, os_ = results[other]
-            assert ne == oe, f"events diverge vs {other}: {ne} vs {oe}"
-            assert nf == of, f"faults diverge vs {other}: {nf} vs {of}"
-            assert ns == os_, f"state diverges vs {other}: {ns} vs {os_}"
+        oe, of, os_ = results["pandas"]
+        assert ne == oe, f"events diverge vs pandas: {ne} vs {oe}"
+        assert nf == of, f"faults diverge vs pandas: {nf} vs {of}"
+        assert ns == os_, f"state diverges vs pandas: {ns} vs {os_}"
         self.events, self.faults, self.state = ne, nf, ns
 
 
@@ -296,7 +285,7 @@ def test_divergence4_state_keyed_tokens_are_inert(run_both):
     session folds and closes normally, raw_log holds the actual lines,
     and the event timestamp is the first line's parsed head timestamp —
     a deliberate, documented robustness improvement, identical across
-    all three fold strategies."""
+    both fold strategies."""
     import datetime
 
     r = run_both(
@@ -315,3 +304,9 @@ def test_divergence4_state_keyed_tokens_are_inert(run_both):
     assert all("AAAAAAAAAAA" in ln for ln in e["raw_log"])
     # first HEAD timestamp, not the injected timestamp= token
     assert e["timestamp"] == datetime.datetime(2024, 4, 9, 17, 22, 40, 1)
+
+
+def test_unknown_fold_strategy_raises(spark):
+    parsed = parse_lines(lines_df(spark, [_line(0, 1, "AAAAAAAAAAA: removed")]))
+    with pytest.raises(ValueError, match="unknown fold strategy"):
+        sessionize(parsed, fold="native")

@@ -836,8 +836,8 @@ def test_q54_nodata_independence(spark):
 def test_stream_shuffle_partitions_derive_from_source(spark, tmp_path,
                                                       monkeypatch):
     """Micro-batch state parallelism derives from source bytes (guide
-    §2.2), floors at 1, and honors the env override — never a constant
-    tuned to the local core count."""
+    §2.2), floors at 1, caps at 4×defaultParallelism, and honors the env
+    override — never a constant tuned to the local core count."""
     from postfix_log_parser_spark.logquery import _stream_shuffle_partitions
 
     monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTITIONS", raising=False)
@@ -848,6 +848,11 @@ def test_stream_shuffle_partitions_derive_from_source(spark, tmp_path,
     with open(big, "wb") as fh:
         fh.truncate(200 << 20)  # sparse 200 MB → ceil(200/64) = 4
     assert _stream_shuffle_partitions(spark, str(big)) == "4"
+    cap = 4 * spark.sparkContext.defaultParallelism
+    huge = tmp_path / "huge.bin"
+    with open(huge, "wb") as fh:
+        fh.truncate((cap + 1) * (64 << 20))  # sparse: one partition past the cap
+    assert _stream_shuffle_partitions(spark, str(huge)) == str(cap)
     assert _stream_shuffle_partitions(spark, None) == "8"  # legacy default
     monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "13")
     assert _stream_shuffle_partitions(spark, str(small)) == "13"
