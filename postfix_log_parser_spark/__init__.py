@@ -20,6 +20,12 @@ applyInPandasWithState) and a 100-TB-scale extension layer (dedup / similarity /
 multimodal) under ``ext/``.
 """
 
+from postfix_log_parser_spark import _pyworker
+
+# in a Spark Python worker on CPython < 3.12, later tasks stop re-reading
+# pyspark.zip (see _pyworker); a no-op in the driver
+_pyworker.install()
+
 from postfix_log_parser_spark.session import get_spark
 from postfix_log_parser_spark.operators.parse import (
     dovecot_dim_from_raw,

@@ -50,8 +50,6 @@ _SLOW_SCENARIOS = {
     "test_layout_migration_resumable_and_probe_follows_manifest",
     "test_takedown_crash_after_rewrites_before_stats_still_decrements",
     "test_takedown_crash_before_apply_recovers_from_frozen_txn",
-    "test_fuzz_stream_matches_batch",
-    "test_fuzz_stream_multifile_ties_match_batch",
 }
 
 
