@@ -1,4 +1,5 @@
-"""Streaming sessionizer — ``applyInPandasWithState`` twin of the batch fold.
+"""Streaming sessionizer — the batch fold's state machine under
+``applyInPandasWithState``.
 
 The reference is a streaming tool: it consumes an unbounded stdin line
 stream, keeps per-``queue_id`` dict state, emits an event when ``removed``
@@ -8,10 +9,14 @@ fold, ``:515`` stdin loop).  This module is the Structured Streaming
 mirror:
 
 * **A1/A2** — the per-queue ordered fold runs incrementally in
-  ``applyInPandasWithState`` keyed on ``queue_id``: state is the open
-  session (fields map, to-list, raw_log, first timestamp), a ``removed``
-  row finalizes it (required-key check → event or Q4 fault, state kept
-  open on failure exactly like the batch fold / reference).
+  ``applyInPandasWithState`` keyed on ``queue_id``, and it is the batch
+  fold: each group restores a ``_QueueFolder`` (``operators/sessionize``)
+  from its state, feeds it the batch's lines, and saves its slots back.
+  The required-key check, Q4 (a failed ``removed`` leaves the session
+  open), Q12 faults, subject, status and to-list folding exist once, in
+  ``_QueueFolder.feed``; output rows are ``FOLD_SCHEMA`` rows.  Only the
+  stream shell lives here: the (timestamp, file, seq) sort, the in-fold
+  J1 for correlated sieve lines, TTL eviction, and the state update.
 * **A3** — TTL eviction via **event-time timeout** (default): the state's
   timeout is ``first_timestamp + ttl`` against the watermark.  The
   reference mixes event time with wall-clock (`now()` vs stored event ts —
@@ -68,7 +73,7 @@ over-admitting cheap filter never changes WHAT folds.
 from __future__ import annotations
 
 import datetime
-import re
+import time
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -77,8 +82,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from postfix_log_parser_spark.operators.parse import parse_lines
-from postfix_log_parser_spark.operators.sessionize import _project_events
+from postfix_log_parser_spark.operators.parse import _parse_row, parse_lines
+from postfix_log_parser_spark.operators.sessionize import (
+    _FOLD_COLUMNS,
+    FOLD_SCHEMA,
+    _project_events,
+    _QueueFolder,
+)
 from postfix_log_parser_spark.schema import EVENT_COLUMNS
 
 # ---------------------------------------------------------------------------
@@ -266,31 +276,43 @@ def prepare_stream(lines: DataFrame, line_col: str = "value") -> DataFrame:
 
 STREAM_STATE_SCHEMA = T.StructType(
     [
-        T.StructField("start_ts", T.TimestampType(), True),
+        T.StructField("first_ts", T.TimestampType(), True),
+        T.StructField("start_seq", T.LongType(), True),
         T.StructField("field_keys", T.ArrayType(T.StringType()), True),
         T.StructField("field_vals", T.ArrayType(T.StringType()), True),
         T.StructField("to_list", T.ArrayType(T.StringType()), True),
         T.StructField("raw_log", T.ArrayType(T.StringType()), True),
-        T.StructField("version", T.IntegerType(), True),
+        T.StructField("msgid_seqs", T.ArrayType(T.LongType()), True),
+        T.StructField("msgid_vals", T.ArrayType(T.StringType()), True),
+        T.StructField("kv_dovecot_seq", T.LongType(), True),
     ]
 )
 
-STREAM_FOLD_SCHEMA = T.StructType(
-    [
-        T.StructField("record_type", T.StringType(), False),
-        T.StructField("queue_id", T.StringType(), False),
-        T.StructField("timestamp", T.TimestampType(), True),
-        T.StructField("fields", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("to_list", T.ArrayType(T.StringType()), True),
-        T.StructField("raw_log", T.ArrayType(T.StringType()), True),
-        T.StructField("fault_reason", T.StringType(), True),
-        T.StructField("fault_line", T.StringType(), True),
-    ]
-)
 
-_REQUIRED_KEYS = ("from", "to", "message-id", "status", "status_description")
+def _restore(folder: _QueueFolder, saved: tuple) -> None:
+    """Load an open session's ``_QueueFolder`` slots from group state."""
+    (folder.first_ts, folder.start_seq, keys, vals, folder.to_list,
+     folder.raw_log, mseqs, mvals, folder.kv_dovecot_seq) = saved
+    folder.fields = dict(zip(keys, vals))
+    folder.msgid_sets = list(zip(mseqs, mvals))
 
-_STATE_VERSION = 1
+
+def _snapshot(folder: _QueueFolder) -> tuple:
+    """The folder's slots as one ``STREAM_STATE_SCHEMA`` value.  Numbers
+    nested in arrays are not converted from numpy by ``GroupState.update``,
+    so every seq is cast here."""
+    kv = folder.kv_dovecot_seq
+    return (
+        folder.first_ts,
+        int(folder.start_seq),
+        list(folder.fields),
+        list(folder.fields.values()),
+        folder.to_list,
+        folder.raw_log,
+        [int(s) for s, _ in folder.msgid_sets],
+        [v for _, v in folder.msgid_sets],
+        None if kv is None else int(kv),
+    )
 
 
 def _make_fold(ttl_seconds: int, processing_time: bool = False):
@@ -299,46 +321,20 @@ def _make_fold(ttl_seconds: int, processing_time: bool = False):
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        queue_id = key[0]
-        out: list[dict[str, Any]] = []
-
-        def _evicted_row(start_ts, fields, to_list, raw_log):
-            return {
-                "record_type": "evicted",
-                "queue_id": queue_id,
-                "timestamp": start_ts,
-                "fields": dict(fields),
-                "to_list": list(to_list),
-                "raw_log": list(raw_log),
-                "fault_reason": None,
-                "fault_line": None,
-            }
+        out: list = []
+        folder = _QueueFolder(key[0], out)
+        if state.exists:
+            _restore(folder, state.get)
 
         if state.hasTimedOut:
             # A3: TTL eviction — the reference silently deletes
             # (parse.py:272-284); we surface the dropped session.
-            (start_ts, fk, fv, to_list, raw_log, _v) = state.get
-            out.append(
-                _evicted_row(
-                    start_ts,
-                    dict(zip(list(fk or []), list(fv or []))),
-                    list(to_list or []),
-                    list(raw_log or []),
-                )
-            )
+            out.append(folder._session_row("evicted", None))
             state.remove()
-            yield pd.DataFrame(out, columns=[f.name for f in STREAM_FOLD_SCHEMA.fields])
+            yield pd.DataFrame(out, columns=_FOLD_COLUMNS)
             return
 
-        if state.exists:
-            (start_ts, fk, fv, to_list, raw_log, _v) = state.get
-            fields = dict(zip(list(fk or []), list(fv or [])))
-            to_list = list(to_list or [])
-            raw_log = list(raw_log or [])
-        else:
-            start_ts, fields, to_list, raw_log = None, {}, [], []
-
-        if processing_time and start_ts is not None:
+        if processing_time and folder.start_seq is not None:
             # Strict-parity Q9: the reference evicts ON LINE ARRIVAL
             # (feed_line → _cleanup_old_entities, parse.py:385,:272-284),
             # comparing wall-clock now() against the stored FIRST event
@@ -350,127 +346,38 @@ def _make_fold(ttl_seconds: int, processing_time: bool = False):
             # to 1/minute; per-key-on-arrival lands inside that tolerance
             # and differs only in state-store residency for keys that
             # never see another line — their OUTPUT is identical: nothing.)
-            import time as _time
-
             deadline = (
-                start_ts.replace(tzinfo=datetime.timezone.utc).timestamp()
+                folder.first_ts.replace(tzinfo=datetime.timezone.utc).timestamp()
                 + ttl_seconds
             )
-            if _time.time() > deadline:
-                out.append(_evicted_row(start_ts, fields, to_list, raw_log))
-                start_ts, fields, to_list, raw_log = None, {}, [], []
+            if time.time() > deadline:
+                out.append(folder._session_row("evicted", None))
+                folder = _QueueFolder(key[0], out)
 
         rows = pd.concat(list(pdfs), ignore_index=True)
         # (timestamp, file, in-file offset): byte-identical timestamps
         # fold in the batch source's global order (read_text numbers
         # splits in (file, block) order) — stream == batch on ties
         rows = rows.sort_values(["timestamp", "file", "seq"], kind="stable")
-
-        from postfix_log_parser_spark.operators.parse import _parse_row
-
-        opened = False  # did this batch leave an open session?
         for row in rows.itertuples(index=False):
-            ts = None if pd.isna(row.timestamp) else row.timestamp.to_pydatetime()
             if row.dove_dup:
                 # J1: apply only if the session's CURRENT message-id
                 # matches (parse.py:370-375); never touches raw_log (Q8)
-                if fields and fields.get("message-id") == row.dovecot_msgid:
-                    fields["dovecot_fileinto_action"] = row.dovecot_action
+                if folder.fields.get("message-id") == row.dovecot_msgid:
+                    folder.fields["dovecot_fileinto_action"] = row.dovecot_action
                 continue
-            # FUSED parse: the feed ships the raw line (the plan upstream
-            # is only the cheap queue-shape/evt projection), and the full
-            # per-line parse — the same Python twin the fused batch
-            # engine uses — runs here, inside the state worker, where the
-            # line is already in Python.  Admission re-checks the gates
-            # the cheap feed filter over-admits (min-arity, strict ISO
-            # parse, dovecot-fault shapes): unadmitted lines never fold,
-            # exactly as the old pre-filtered feed.
-            (
-                _seq, line, kind, _pts, _qid, pfields, pto_list, pstatus,
-                psubject, _dmsgid, _daction, pfault, admitted,
-            ) = _parse_row(0, row.line)
-            if not admitted:
-                continue
-            raw_log.append(line)
-            if start_ts is None:
-                start_ts = ts
-            opened = True
-            if pfault is not None:
-                # admitted line that raised in the reference (Q12)
-                out.append(
-                    {
-                        "record_type": "fault",
-                        "queue_id": queue_id,
-                        "timestamp": None,
-                        "fields": None,
-                        "to_list": None,
-                        "raw_log": None,
-                        "fault_reason": pfault,
-                        "fault_line": line,
-                    }
-                )
-                continue
-            if kind == "removed":
-                missing = next(
-                    (
-                        k
-                        for k in _REQUIRED_KEYS
-                        if (k == "to" and not to_list)
-                        or (k != "to" and k not in fields)
-                    ),
-                    None,
-                )
-                if missing is None:
-                    out.append(
-                        {
-                            "record_type": "event",
-                            "queue_id": queue_id,
-                            "timestamp": start_ts,
-                            "fields": dict(fields),
-                            "to_list": list(to_list),
-                            "raw_log": list(raw_log),
-                            "fault_reason": None,
-                            "fault_line": None,
-                        }
-                    )
-                    fields, to_list, raw_log = {}, [], []
-                    start_ts, opened = None, False
-                else:  # Q4: KeyError → fault, session stays open
-                    out.append(
-                        {
-                            "record_type": "fault",
-                            "queue_id": queue_id,
-                            "timestamp": None,
-                            "fields": None,
-                            "to_list": None,
-                            "raw_log": None,
-                            "fault_reason": f"KeyError: '{missing}'",
-                            "fault_line": line,
-                        }
-                    )
-                continue
-            if kind == "subject":
-                fields["subject"] = psubject
-                continue
-            if pfields:
-                fields.update(pfields)
-            if pto_list:
-                to_list.extend(pto_list)
-            if pstatus is not None:
-                fields["status_description"] = pstatus
+            # FUSED parse, as in the batch ``_feed_raw_frame``: the feed
+            # ships the raw line and the same per-line parse runs here.
+            # Admission re-checks the gates the cheap feed filter
+            # over-admits (min-arity, strict ISO parse, dovecot-fault
+            # shapes), so unadmitted lines never fold.
+            r = _parse_row(row.seq, row.line)
+            if r[12]:
+                folder.feed(r[0], r[1], r[2], row.timestamp.to_pydatetime(),
+                            r[5], r[6], r[7], r[8], r[11])
 
-        if opened or (start_ts is not None and raw_log):
-            keys = list(fields.keys())
-            state.update(
-                (
-                    start_ts,
-                    keys,
-                    [fields[k] for k in keys],
-                    list(to_list),
-                    list(raw_log),
-                    _STATE_VERSION,
-                )
-            )
+        if folder.start_seq is not None:
+            state.update(_snapshot(folder))
             if not processing_time:
                 # A3 timeout: first-line event time + TTL (reference:
                 # stored ts older than OLD_LOGS=10min → evict), clamped
@@ -479,18 +386,18 @@ def _make_fold(ttl_seconds: int, processing_time: bool = False):
                 # arrival-driven like the reference's feed_line cleanup,
                 # and pending processing timers would keep an availableNow
                 # replay looping no-data batches forever.)
-                timeout_ms = int(start_ts.timestamp() * 1000) + ttl_seconds * 1000
+                timeout_ms = int(folder.first_ts.timestamp() * 1000) + ttl_seconds * 1000
                 wm = state.getCurrentWatermarkMs()
                 state.setTimeoutTimestamp(max(timeout_ms, wm + 1))
         elif state.exists:
             state.remove()
 
-        yield pd.DataFrame(out, columns=[f.name for f in STREAM_FOLD_SCHEMA.fields])
+        yield pd.DataFrame(out, columns=_FOLD_COLUMNS)
 
     return fold
 
 
-STREAM_OUT_SCHEMA = STREAM_FOLD_SCHEMA
+STREAM_OUT_SCHEMA = FOLD_SCHEMA
 
 
 def sessionize_stream(
@@ -502,11 +409,14 @@ def sessionize_stream(
 ) -> DataFrame:
     """Raw streaming text lines → folded session-record stream.
 
-    Output rows carry ``record_type`` ∈ {event, fault, evicted}; use
-    ``stream_events`` / ``stream_faults`` to project the batch-compatible
-    events / faults shapes.  ``ttl`` mirrors the reference's ``OLD_LOGS``
-    10-minute eviction horizon (``parse.py:77``) as an event-time timeout;
-    ``watermark_delay`` bounds out-of-order arrival.
+    Output rows are ``FOLD_SCHEMA`` rows (``STREAM_OUT_SCHEMA``) with
+    ``record_type`` ∈ {event, fault, evicted}; use ``stream_events`` /
+    ``stream_faults`` to project the batch-compatible events / faults
+    shapes.  ``ttl`` mirrors the reference's ``OLD_LOGS`` 10-minute
+    eviction horizon (``parse.py:77``) as an event-time timeout; it is
+    ``"<count> <unit>"`` with unit second, minute, hour or day, singular or
+    plural, and anything else raises ``ValueError`` here, before a query
+    starts.  ``watermark_delay`` bounds out-of-order arrival.
 
     ``timeout_mode``: ``"event-time"`` (default) evicts against the
     watermark — deterministic on replays; ``"processing-time"`` is the
@@ -527,6 +437,11 @@ def sessionize_stream(
     """
     from postfix_log_parser_spark.operators.parse import _QUEUE_ID_RE, _WS
 
+    ttl_seconds = _duration_seconds(ttl)
+    if timeout_mode not in ("event-time", "processing-time"):
+        raise ValueError(f"timeout_mode must be event-time|processing-time, got {timeout_mode!r}")
+    processing = timeout_mode == "processing-time"
+    ttl_bound = F.expr(f"INTERVAL {ttl_seconds} SECONDS")
     prepared = prepare_stream(lines, line_col)
 
     # ONE shared watermark node on a unified event-time column computed
@@ -657,8 +572,8 @@ def sessionize_stream(
         # batch path imposes no time bound at all, so the streaming bound
         # must be at least as wide as the arrival disorder the watermark
         # admits.  State cost is symmetric with the upper bound.
-        & (F.col("d_ts") >= F.col("a_ts") - F.expr(f"interval {ttl}"))
-        & (F.col("d_ts") <= F.col("a_ts") + F.expr(f"interval {ttl}")),
+        & (F.col("d_ts") >= F.col("a_ts") - ttl_bound)
+        & (F.col("d_ts") <= F.col("a_ts") + ttl_bound),
         "inner",
     ).select(
         F.col("a_queue").alias("queue_id"),
@@ -672,13 +587,9 @@ def sessionize_stream(
     )
 
     feed = admitted.unionByName(resolved)
-    ttl_seconds = _duration_seconds(ttl)
-    if timeout_mode not in ("event-time", "processing-time"):
-        raise ValueError(f"timeout_mode must be event-time|processing-time, got {timeout_mode!r}")
-    processing = timeout_mode == "processing-time"
     return feed.groupBy("queue_id").applyInPandasWithState(
         _make_fold(ttl_seconds, processing_time=processing),
-        STREAM_FOLD_SCHEMA,
+        FOLD_SCHEMA,
         STREAM_STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout
@@ -687,17 +598,20 @@ def sessionize_stream(
     )
 
 
+_UNIT_SECONDS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
+
+
 def _duration_seconds(spec: str) -> int:
-    qty, unit = spec.split()
-    mult = {
-        "second": 1,
-        "seconds": 1,
-        "minute": 60,
-        "minutes": 60,
-        "hour": 3600,
-        "hours": 3600,
-    }[unit]
-    return int(qty) * mult
+    """``"<count> <unit>"`` → seconds; the unit is second, minute, hour or
+    day, singular or plural (``"10 minutes"``, ``"1 day"``)."""
+    parts = spec.split()
+    unit = parts[-1].removesuffix("s") if parts else ""
+    if len(parts) != 2 or not parts[0].isdecimal() or unit not in _UNIT_SECONDS:
+        raise ValueError(
+            f"ttl must be '<count> <unit>' with unit second, minute, hour or "
+            f"day (singular or plural), e.g. '10 minutes'; got {spec!r}"
+        )
+    return int(parts[0]) * _UNIT_SECONDS[unit]
 
 
 def stream_events(folded: DataFrame) -> DataFrame:
@@ -712,8 +626,8 @@ def stream_events(folded: DataFrame) -> DataFrame:
         F.try_element_at(F.col("fields"), F.lit("dovecot_fileinto_action")).alias(
             "_dovecot_final"
         ),
-        F.lit(None).cast("long").alias("start_seq"),
-        F.lit(None).cast("long").alias("removed_seq"),
+        "start_seq",
+        "removed_seq",
     )
     return _project_events(sessions).select(*EVENT_COLUMNS)
 

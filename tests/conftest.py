@@ -41,12 +41,7 @@ _SLOW_SCENARIOS = {
     "test_restart_resumes_from_checkpointed_waves",
     "test_compact_state_bounds_file_counts_and_keeps_answers",
     "test_single_component_wave_rewrites_at_most_one_map_bucket",
-    "test_stream_cleanup_eviction_state_shape",
-    "test_stream_multibatch_state_and_ttl",
     "test_dedup_within_watermark_expiry",
-    "test_stream_processing_time_ttl",
-    "test_stream_duplicated_sessions_across_batches",
-    "test_stream_restart_without_new_data_is_idempotent",
     "test_layout_migration_resumable_and_probe_follows_manifest",
     "test_takedown_crash_after_rewrites_before_stats_still_decrements",
     "test_takedown_crash_before_apply_recovers_from_frozen_txn",

@@ -11,10 +11,16 @@ fields-map keys, namespaced away from the engine's bookkeeping, and the
 differentials pin that ALL engine variants agree on that sane semantics.
 """
 
+import functools
+import os
 import random
+import time
+
+import pytest
 
 from postfix_log_parser_spark import parse_lines, parse_lines_arrow, sessionize
 from postfix_log_parser_spark.sources.text import lines_df
+from tests.test_streaming import await_stream
 
 R = random.Random(42)
 
@@ -114,6 +120,13 @@ def gen_stream_lines(n: int, ties: bool = False) -> list[str]:
     return out
 
 
+@functools.lru_cache(maxsize=None)
+def _tie_lines() -> tuple[str, ...]:
+    # drawn once, so both trigger settings fold the same lines and the
+    # shared generator R advances exactly as for one run
+    return tuple(gen_stream_lines(1500, ties=True))
+
+
 def test_fuzz_stream_matches_batch(spark, tmp_path):
     lines = gen_stream_lines(2000)
     in_dir = tmp_path / "in"
@@ -134,7 +147,7 @@ def test_fuzz_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(400)
+    await_stream(q, 400)
     folded_tbl = spark.table("fuzz_stream")
     s_events = sorted(
         (r.asDict(recursive=True) for r in stream_events(folded_tbl).collect()),
@@ -161,20 +174,30 @@ def test_fuzz_stream_matches_batch(spark, tmp_path):
     assert s_faults == b_faults
 
 
-def test_fuzz_stream_multifile_ties_match_batch(spark, tmp_path):
+@pytest.mark.parametrize(
+    "files_per_trigger", [None, 1], ids=["one-batch", "one-file-per-batch"]
+)
+def test_fuzz_stream_multifile_ties_match_batch(spark, tmp_path, files_per_trigger):
     """Adversarial tie-order case: duplicated timestamps scattered across
-    THREE deliberately size-skewed files in one batch.  Spark packs scan
-    partitions by size (descending), so the old partition-id-salted seq
-    folded the big file first on ties; the stable (file, offset) tiebreak
-    must reproduce the batch concatenation order exactly."""
-    lines = gen_stream_lines(1500, ties=True)
+    THREE deliberately size-skewed files.  Spark packs scan partitions by
+    size (descending), so the old partition-id-salted seq folded the big
+    file first on ties; the stable (file, offset) tiebreak must reproduce
+    the batch concatenation order exactly.  With one file per trigger the
+    files are three micro-batches, so every open session's state is saved
+    and restored between them."""
+    lines = list(_tie_lines())
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     # unequal contiguous splits, file-name order == concatenation order;
-    # padding makes a.log the SMALLEST so size-order != name-order
-    (in_dir / "a.log").write_text("\n".join(lines[:200]))
-    (in_dir / "b.log").write_text("\n".join(lines[200:1100]))
-    (in_dir / "c.log").write_text("\n".join(lines[1100:]))
+    # padding makes a.log the SMALLEST so size-order != name-order.  The
+    # file source takes files in modification-time order, so the mtimes
+    # follow the names too.
+    now = int(time.time())
+    for i, (name, part) in enumerate(
+        [("a.log", lines[:200]), ("b.log", lines[200:1100]), ("c.log", lines[1100:])]
+    ):
+        (in_dir / name).write_text("\n".join(part))
+        os.utime(in_dir / name, (now - 10 + i, now - 10 + i))
 
     from postfix_log_parser_spark.streaming import (
         sessionize_stream,
@@ -182,7 +205,10 @@ def test_fuzz_stream_multifile_ties_match_batch(spark, tmp_path):
         stream_faults,
     )
 
-    folded = sessionize_stream(spark.readStream.text(str(in_dir)))
+    source = spark.readStream
+    if files_per_trigger is not None:
+        source = source.option("maxFilesPerTrigger", files_per_trigger)
+    folded = sessionize_stream(source.text(str(in_dir)))
     q = (
         folded.writeStream.format("memory")
         .queryName("fuzz_stream_ties")
@@ -190,7 +216,7 @@ def test_fuzz_stream_multifile_ties_match_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(400)
+    await_stream(q, 400)
     folded_tbl = spark.table("fuzz_stream_ties")
     key = lambda d: (d["queue_id"], str(d["timestamp"]), d["raw_log"])  # noqa: E731
     s_events = sorted(

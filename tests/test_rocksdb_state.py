@@ -19,6 +19,7 @@ import os
 import pytest
 
 from tests.test_quirks import _line
+from tests.test_streaming import run_to_parquet
 
 ROCKSDB = (
     "org.apache.spark.sql.execution.streaming.state."
@@ -57,32 +58,14 @@ def test_sessionize_stream_recovers_from_rocksdb_checkpoint(
     the query stops, a new query on the same checkpoint closes it in
     batch 2 — and the checkpoint layout is RocksDB's (zip snapshots,
     not the HDFS provider's .delta files)."""
-    from postfix_log_parser_spark.streaming import (
-        STREAM_OUT_SCHEMA,
-        sessionize_stream,
-    )
-
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     ckpt = tmp_path / "ckpt"
-    out_dir = tmp_path / "out"
-
-    def run_and_read():
-        folded = sessionize_stream(spark.readStream.text(str(in_dir)))
-        q = (
-            folded.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return spark.read.schema(STREAM_OUT_SCHEMA).parquet(str(out_dir))
 
     (in_dir / "01.log").write_text(
         _line(0, 1, "DDDDDDDDDDD: from=<d@d.com>, message-id=<m@d>")
     )
-    assert run_and_read().where("record_type = 'event'").count() == 0
+    assert run_to_parquet(spark, tmp_path).where("record_type = 'event'").count() == 0
 
     files = _state_files(ckpt)
     assert any(f.endswith(".zip") for f in files), (
@@ -98,7 +81,7 @@ def test_sessionize_stream_recovers_from_rocksdb_checkpoint(
             ]
         )
     )
-    events = run_and_read().where("record_type = 'event'").collect()
+    events = run_to_parquet(spark, tmp_path).where("record_type = 'event'").collect()
     assert [r["queue_id"] for r in events] == ["DDDDDDDDDDD"]
 
 

@@ -7,6 +7,7 @@ import pytest
 from postfix_log_parser_spark import parse_lines, sessionize
 from postfix_log_parser_spark.sources.text import lines_df
 from postfix_log_parser_spark.streaming import (
+    STREAM_OUT_SCHEMA,
     sessionize_stream,
     stream_events,
     stream_faults,
@@ -33,6 +34,15 @@ Apr 30 15:09:27 lmtp(x)<1><y>: Info: sieve: msgid=<m@1>: fileinto action: stored
 # scan-locally in streaming and via msgid intervals in batch.
 
 
+def await_stream(q, timeout: int = 300) -> None:
+    """Wait for an availableNow query to finish.  A query that is still
+    running after ``timeout`` seconds fails the test instead of silently
+    spending the whole wait."""
+    assert q.awaitTermination(timeout), (
+        f"streaming query {q.name or q.id} did not finish within {timeout} s"
+    )
+
+
 def _run_stream(spark, in_dir, ckpt, qname):
     folded = sessionize_stream(spark.readStream.text(str(in_dir)))
     q = (
@@ -42,8 +52,25 @@ def _run_stream(spark, in_dir, ckpt, qname):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     return spark.table(qname)
+
+
+def run_to_parquet(spark, tmp_path, **kwargs):
+    """One availableNow run of ``sessionize_stream`` over ``tmp_path/in``
+    into a parquet file sink at ``tmp_path/out`` (checkpoint
+    ``tmp_path/ckpt``; the memory sink does not recover across restarts).
+    Returns everything the sink holds so far."""
+    folded = sessionize_stream(spark.readStream.text(str(tmp_path / "in")), **kwargs)
+    q = (
+        folded.writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    await_stream(q)
+    return spark.read.schema(STREAM_OUT_SCHEMA).parquet(str(tmp_path / "out"))
 
 
 def test_stream_matches_batch(spark, tmp_path):
@@ -87,7 +114,7 @@ def test_stream_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     pre = spark.table("stream_prefaults").collect()
     assert any("IndexError" in r["fault_reason"] for r in pre)
 
@@ -100,22 +127,6 @@ def test_stream_multibatch_state_and_ttl(spark, tmp_path):
     does not support checkpoint recovery across restarts."""
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    ckpt = tmp_path / "ckpt"
-    out_dir = tmp_path / "out"
-
-    def run_and_read():
-        folded = sessionize_stream(spark.readStream.text(str(in_dir)))
-        q = (
-            folded.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        from postfix_log_parser_spark.streaming import STREAM_OUT_SCHEMA
-
-        return spark.read.schema(STREAM_OUT_SCHEMA).parquet(str(out_dir))
 
     # batch 1: first half of session D + all of abandoned session E
     (in_dir / "01.log").write_text(
@@ -126,7 +137,7 @@ def test_stream_multibatch_state_and_ttl(spark, tmp_path):
             ]
         )
     )
-    assert run_and_read().count() == 0  # both sessions still open
+    assert run_to_parquet(spark, tmp_path).count() == 0  # both sessions still open
 
     # batch 2: second half of session D (same event-time neighborhood)
     (in_dir / "02.log").write_text(
@@ -137,7 +148,7 @@ def test_stream_multibatch_state_and_ttl(spark, tmp_path):
             ]
         )
     )
-    out2 = run_and_read()
+    out2 = run_to_parquet(spark, tmp_path)
     evs = [r for r in out2.collect() if r["record_type"] == "event"]
     assert [e["queue_id"] for e in evs] == ["DDDDDDDDDDD"]
     assert len(evs[0]["raw_log"]) == 3  # lines from both batches
@@ -147,11 +158,11 @@ def test_stream_multibatch_state_and_ttl(spark, tmp_path):
     (in_dir / "03.log").write_text(
         _line(0, 5, "FFFFFFFFFFF: from=<f@f.com>").replace("T20:22:4", "T21:22:4")
     )
-    run_and_read()
+    run_to_parquet(spark, tmp_path)
     (in_dir / "04.log").write_text(
         _line(0, 6, "FFFFFFFFFFF: size=1").replace("T20:22:4", "T21:23:4")
     )
-    out4 = run_and_read()
+    out4 = run_to_parquet(spark, tmp_path)
     evicted = [r for r in out4.collect() if r["record_type"] == "evicted"]
     assert [r["queue_id"] for r in evicted] == ["EEEEEEEEEEE"]
     assert dict(evicted[0]["fields"])["from"] == "<e@e.com>"
@@ -164,22 +175,6 @@ def test_stream_dovecot_cross_batch(spark, tmp_path):
     was the round-2 documented divergence 3, now closed."""
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    ckpt = tmp_path / "ckpt"
-    out_dir = tmp_path / "out"
-
-    def run_and_read():
-        folded = sessionize_stream(spark.readStream.text(str(in_dir)))
-        q = (
-            folded.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        from postfix_log_parser_spark.streaming import STREAM_OUT_SCHEMA
-
-        return spark.read.schema(STREAM_OUT_SCHEMA).parquet(str(out_dir))
 
     # batch 1: the session assigns its message-id, no sieve line yet
     (in_dir / "01.log").write_text(
@@ -190,7 +185,7 @@ def test_stream_dovecot_cross_batch(spark, tmp_path):
             ]
         )
     )
-    assert run_and_read().count() == 0
+    assert run_to_parquet(spark, tmp_path).count() == 0
 
     # batch 2 (new file => new batch, new scan partition): a timestamped
     # noise line (gives the sieve line its carried event time — real
@@ -206,7 +201,7 @@ def test_stream_dovecot_cross_batch(spark, tmp_path):
             ]
         )
     )
-    out = run_and_read()
+    out = run_to_parquet(spark, tmp_path)
     evs = [r for r in out.collect() if r["record_type"] == "event"]
     assert [e["queue_id"] for e in evs] == ["ABABABABAB1"]
     assert dict(evs[0]["fields"])["dovecot_fileinto_action"] == (
@@ -236,32 +231,16 @@ def test_stream_cleanup_eviction_state_shape(spark, tmp_path):
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    ckpt = tmp_path / "ckpt"
-    out_dir = tmp_path / "out"
-
-    def run_and_read():
-        folded = sessionize_stream(spark.readStream.text(str(in_dir)))
-        q = (
-            folded.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        from postfix_log_parser_spark.streaming import STREAM_OUT_SCHEMA
-
-        return spark.read.schema(STREAM_OUT_SCHEMA).parquet(str(out_dir))
 
     (in_dir / "01.log").write_text(CLEANUP_FIXTURE)
-    assert run_and_read().count() == 0  # open session: no event, no fault
+    assert run_to_parquet(spark, tmp_path).count() == 0  # open session: no event, no fault
 
     # event time advances ~5 min: still inside OLD_LOGS -> entry survives
     (in_dir / "02.log").write_text(
         "2024-04-09T20:27:43.000000+03:00 localhost postfix/qmgr[837]: "
         "FFFFFFFFFFF: size=1"
     )
-    assert run_and_read().count() == 0
+    assert run_to_parquet(spark, tmp_path).count() == 0
 
     # event time jumps a day (the reference test's timedelta(days=1)):
     # watermark passes first_ts + 10 min -> eviction fires
@@ -269,12 +248,12 @@ def test_stream_cleanup_eviction_state_shape(spark, tmp_path):
         "2024-04-10T20:27:43.000000+03:00 localhost postfix/qmgr[837]: "
         "FFFFFFFFFFF: nrcpt=1"
     )
-    run_and_read()
+    run_to_parquet(spark, tmp_path)
     (in_dir / "04.log").write_text(
         "2024-04-10T20:27:44.000000+03:00 localhost postfix/qmgr[837]: "
         "FFFFFFFFFFF: delay=1"
     )
-    out = run_and_read()
+    out = run_to_parquet(spark, tmp_path)
     evicted = [r for r in out.collect() if r["record_type"] == "evicted"]
     # FFFFFFFFFFF evicts too: the reference's cleanup keys on the stored
     # FIRST timestamp regardless of later activity (parse.py:279-283)
@@ -357,28 +336,12 @@ def test_stream_sieve_line_opens_partition(spark, tmp_path):
     covered by the msgid-interval golden tests.)"""
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    ckpt = tmp_path / "ckpt"
-    out_dir = tmp_path / "out"
-
-    def run_and_read():
-        folded = sessionize_stream(spark.readStream.text(str(in_dir)))
-        q = (
-            folded.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        from postfix_log_parser_spark.streaming import STREAM_OUT_SCHEMA
-
-        return spark.read.schema(STREAM_OUT_SCHEMA).parquet(str(out_dir))
 
     # batch 1: the session assigns its message-id
     (in_dir / "01.log").write_text(
         _line(0, 1, "CCCCCCCCCCC: from=<h@h.com>, message-id=<m@h>")
     )
-    assert run_and_read().count() == 0
+    assert run_to_parquet(spark, tmp_path).count() == 0
     # batch 2: the partition OPENS with the sieve line — no preceding
     # timestamp exists in this file; backfill gives it the removed
     # line's (following) event time, and it folds before 'removed'
@@ -392,7 +355,7 @@ def test_stream_sieve_line_opens_partition(spark, tmp_path):
             ]
         )
     )
-    out = run_and_read()
+    out = run_to_parquet(spark, tmp_path)
     evs = [
         r.asDict(recursive=True)
         for r in out.collect()
@@ -413,35 +376,13 @@ def test_stream_processing_time_ttl(spark, tmp_path):
     later line for the same queue evicts the stored session first and
     folds into a FRESH session — event time never passes first_ts + TTL
     here; only the wall clock decides."""
-    from postfix_log_parser_spark.streaming import sessionize_stream as ss
-
+    mode = dict(ttl="10 minutes", timeout_mode="processing-time")
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    ckpt = tmp_path / "ckpt"
-    out_dir = tmp_path / "out"
-
-    def run_and_read():
-        folded = ss(
-            spark.readStream.text(str(in_dir)),
-            ttl="10 minutes",
-            timeout_mode="processing-time",
-        )
-        q = (
-            folded.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        from postfix_log_parser_spark.streaming import STREAM_OUT_SCHEMA
-
-        return spark.read.schema(STREAM_OUT_SCHEMA).parquet(str(out_dir))
-
     (in_dir / "01.log").write_text(
         _line(0, 1, "ACACACACA01: from=<g@g.com>, message-id=<m@g>")
     )
-    assert run_and_read().count() == 0  # stored, stale, awaiting arrival
+    assert run_to_parquet(spark, tmp_path, **mode).count() == 0  # stored, stale, awaiting arrival
     # batch 2: new lines for the SAME queue -> stale state evicts first,
     # then the fresh session folds and completes normally
     (in_dir / "02.log").write_text(
@@ -453,7 +394,7 @@ def test_stream_processing_time_ttl(spark, tmp_path):
             ]
         )
     )
-    out = run_and_read()
+    out = run_to_parquet(spark, tmp_path, **mode)
     evicted = [r for r in out.collect() if r["record_type"] == "evicted"]
     assert [r["queue_id"] for r in evicted] == ["ACACACACA01"]
     assert dict(evicted[0]["fields"])["from"] == "<g@g.com>"
@@ -473,27 +414,11 @@ def test_stream_duplicated_sessions_across_batches(spark, tmp_path):
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    ckpt = tmp_path / "ckpt"
-    out_dir = tmp_path / "out"
-
-    def run_and_read():
-        folded = sessionize_stream(spark.readStream.text(str(in_dir)))
-        q = (
-            folded.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        from postfix_log_parser_spark.streaming import STREAM_OUT_SCHEMA
-
-        return spark.read.schema(STREAM_OUT_SCHEMA).parquet(str(out_dir))
 
     (in_dir / "01.log").write_text(BASIC)
-    run_and_read()
+    run_to_parquet(spark, tmp_path)
     (in_dir / "02.log").write_text(BASIC)  # byte-identical duplicate
-    out = run_and_read()
+    out = run_to_parquet(spark, tmp_path)
     s_events = sorted(
         (
             r.asDict(recursive=True)
@@ -518,24 +443,8 @@ def test_stream_restart_without_new_data_is_idempotent(spark, tmp_path):
     """Exactly-once sink contract: restarting the checkpointed query with
     NO new input must add nothing to the file sink — no replayed events,
     no duplicated state output."""
-    from postfix_log_parser_spark.streaming import STREAM_OUT_SCHEMA
-
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    ckpt = tmp_path / "ckpt"
-    out_dir = tmp_path / "out"
-
-    def run_and_read():
-        folded = sessionize_stream(spark.readStream.text(str(in_dir)))
-        q = (
-            folded.writeStream.format("parquet")
-            .option("path", str(out_dir))
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return spark.read.schema(STREAM_OUT_SCHEMA).parquet(str(out_dir))
 
     (in_dir / "01.log").write_text(
         "\n".join(
@@ -546,14 +455,36 @@ def test_stream_restart_without_new_data_is_idempotent(spark, tmp_path):
             ]
         )
     )
-    first = run_and_read().collect()
+    first = run_to_parquet(spark, tmp_path).collect()
     assert [r["queue_id"] for r in first if r["record_type"] == "event"] == [
         "AAAAAAAAAAA"
     ]
     # restart twice with no new files: byte-identical output set
     for _ in range(2):
-        again = run_and_read().collect()
+        again = run_to_parquet(spark, tmp_path).collect()
         assert sorted(map(str, again)) == sorted(map(str, first))
+
+
+def test_stream_ttl_accepts_day_units(spark, tmp_path):
+    """``ttl`` takes second, minute, hour or day, singular or plural, and
+    the join bound is built from the parsed seconds.  Plan only: no query
+    starts."""
+    from postfix_log_parser_spark.streaming.sessionize_stream import (
+        _duration_seconds,
+    )
+
+    assert [_duration_seconds(t) for t in ("1 day", "2 hours", "1 minute", "30 seconds")] == [
+        86400, 7200, 60, 30,
+    ]
+    folded = sessionize_stream(spark.readStream.text(str(tmp_path)), ttl="1 day")
+    assert folded.isStreaming
+
+
+def test_stream_ttl_rejects_unknown_form(spark, tmp_path):
+    """A ttl outside the accepted form fails when the stream is built,
+    naming the form.  Plan only: no query starts."""
+    with pytest.raises(ValueError, match="second, minute, hour or day"):
+        sessionize_stream(spark.readStream.text(str(tmp_path)), ttl="10min")
 
 
 def test_stream_interval_join_cross_batch(spark, tmp_path):
@@ -613,7 +544,7 @@ def test_stream_interval_join_cross_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = spark.read.schema(
         "purchase_id long, click_id long, user_id long, gap_us long"
     ).parquet(str(out_dir))
@@ -681,7 +612,7 @@ def test_dedup_within_watermark_expiry(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_stream(q)
     got = spark.read.schema("event_id long, user_id long").parquet(str(out_dir))
     emitted = {r.event_id for r in got.collect()}
     assert 1 in emitted          # first occurrence
